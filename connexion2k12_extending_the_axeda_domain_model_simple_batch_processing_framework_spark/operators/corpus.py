@@ -649,10 +649,10 @@ def sequence_pack(
     into contiguous ranges: pass 1 computes each bucket's token total
     (tiny: 2^bucket_bits rows) and prefix-sums those on the driver-sized
     table; pass 2 does a per-bucket window cumsum and adds the broadcast
-    bucket offset — global offsets from one bounded-width shuffle, the
-    same shape as sources/csv_tasks' per-file line numbering. Because the
-    bucket is the hash's high bits, bucket-major order IS (hash, doc_id)
-    order, so the result equals the single-window computation exactly.
+    bucket offset — global offsets from one bounded-width shuffle.
+    Because the bucket is the hash's high bits, bucket-major order IS
+    (hash, doc_id) order, so the result equals the single-window
+    computation exactly.
     """
     h = hex_hash64(F.col("doc_id").cast("string"))
     d = spread(documents).select(

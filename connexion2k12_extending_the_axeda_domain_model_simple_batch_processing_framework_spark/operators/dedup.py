@@ -971,13 +971,15 @@ def minhash_recall_sweep(
     single-consumer and flow through unpersisted (the r12 shape
     persisted both and re-aggregated them 13 times).
 
-    Output (len(bands_sweep) rows): bands, rows_per_band, sig_len,
+    Output (one row per distinct bands value): bands, rows_per_band, sig_len,
     n_exact, n_candidates, n_verified, n_overlap, recall,
     candidate_precision.
     """
     from ..functions.dfcache import persist_df
 
-    bmax = max(bands_sweep)
+    # a repeated value would alias two aggregates alike
+    bands_sweep = sorted(set(bands_sweep))
+    bmax = bands_sweep[-1]
     k = bmax * rows
     sh = shared_shingle_table(documents, n)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
@@ -1062,7 +1064,7 @@ def minhash_recall_sweep(
                 "candidate_precision"
             ),
         )
-        for bands in sorted(bands_sweep)
+        for bands in bands_sweep
     ]
     return tot.select(F.inline(F.array(*rows_)))
 

@@ -2107,10 +2107,12 @@ def ann_recall_sweep(
     subtree is read twice. (The naive 3× re-probe measured 10.4 s at
     sf0.1; the two-persist r12 shape 5.6-5.9 s.)
 
-    Output (len(nprobes) rows): nprobe, scan_frac, n_queries, k,
+    Output (one row per distinct nprobe): nprobe, scan_frac, n_queries, k,
     n_float, n_overlap, recall.
     """
-    np_max = max(nprobes)
+    # a repeated value would alias two aggregates alike
+    nprobes = sorted(set(nprobes))
+    np_max = nprobes[-1]
     nlist = _resolve_nlist(embeddings, nlist, "vec_id", "embedding")
     centroids, assignments = ivf_build_cached(embeddings, nlist)
     queries = embeddings.filter(F.col("vec_id") % query_mod == 0)
@@ -2206,7 +2208,7 @@ def ann_recall_sweep(
                 "recall"
             ),
         )
-        for np_ in sorted(nprobes)
+        for np_ in nprobes
     ]
     return tot.select(F.inline(F.array(*rows_)))
 
@@ -2245,8 +2247,8 @@ def ann_refine_sweep(
     overlap is a flag attached by ONE left join instead of a semi-join
     per point — one linear pipeline, nothing persisted.
 
-    Output (len(refines) rows): refine, ksub, shortlist, n_queries, k,
-    n_float, n_overlap, recall.
+    Output (one row per distinct refine): refine, ksub, shortlist,
+    n_queries, k, n_float, n_overlap, recall.
     """
     centroids, assignments = ivf_build_cached(embeddings, nlist)
     queries = embeddings.filter(F.col("vec_id") % query_mod == 0)
@@ -2256,7 +2258,9 @@ def ann_refine_sweep(
     books, codes = pq_residual_codes_cached(
         embeddings, centroids, assignments, m, ksub
     )
-    rmax = max(refines)
+    # a repeated value would alias two aggregates alike
+    refines = sorted(set(refines))
+    rmax = refines[-1]
     shortlist = pq_residual_adc_probe(
         centroids, assignments, codes, books, queries, k * rmax, nprobe
     )
@@ -2329,7 +2333,7 @@ def ann_refine_sweep(
                 "recall"
             ),
         )
-        for r in sorted(refines)
+        for r in refines
     ]
     return base.crossJoin(tot).select(F.inline(F.array(*rows_)))
 

@@ -54,6 +54,12 @@ def ensure_session_confs(spark: SparkSession) -> None:
 #: in-session analogue of a catalog's resolved-relation cache. Keyed by
 #: the owning SparkSession so a new session (whose JVM state is gone)
 #: never sees another session's plan.
+#:
+#: The cache assumes the tables are read-only for the session: the
+#: parquet file listing is snapshotted at the first load_table call, so a
+#: writer that rewrites files under ``{sf_dir}/{name}.parquet`` mid-session
+#: leaves later calls reading the stale listing. Such a writer must drop
+#: the table's entries here (and ``spark.catalog.refreshByPath``) itself.
 _TABLE_CACHE: dict = {}
 
 

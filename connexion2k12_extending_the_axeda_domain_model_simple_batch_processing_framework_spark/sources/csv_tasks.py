@@ -2,21 +2,20 @@
 
 Parity: CreateBatch.groovy request contract — an uploaded CSV where each line
 is ``ModelName,SerialNumber,AssetName[,Properties,AssetGroup]``. The
-reference streams the file line-by-line through a ``LineNumberReader``
-(AnalyzeBatch.groovy:101-107); here a task file of any size is a distributed
-``spark.read.text`` scan. Line numbering is per-file split-offset math —
-no stage ever funnels the data through a single partition (the r1 global
-window did; see read_task_file).
+reference numbers lines as it streams the upload through a
+``LineNumberReader`` (AnalyzeBatch.groovy:101-107). Here each upload is
+read whole, as one row, by one task, and numbered in that same task: the
+scan has no shuffle, window, join or broadcast. Many uploads still read in
+parallel, one file per task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: monotonically_increasing_id layout: partition id in the upper 31 bits,
-#: per-partition record number in the lower 33.
-_MID_RECORD_MASK = (1 << 33) - 1
+#: the line terminators Hadoop's line reader splits on
+_LINE_SEP = r"\r\n|\r|\n"
 
 
 def read_task_file(spark: SparkSession, path: str, batch_id: int = 1) -> DataFrame:
@@ -24,36 +23,24 @@ def read_task_file(spark: SparkSession, path: str, batch_id: int = 1) -> DataFra
 
     Line numbers are 1-based within each file, like the reference's
     LineNumberReader loop (AnalyzeBatch.groovy ``tasks.eachLine { task,
-    lineNumber -> ... }`` — one uploaded file per batch).
+    lineNumber -> ... }`` — one uploaded file per batch). ``path`` may be
+    one file or a directory of them; numbering restarts in each file.
 
-    Scale shape: each scan split already knows its local 0-based record
-    offset (the low bits of ``monotonically_increasing_id``); the only
-    coordination needed is each split's starting offset within its file,
-    computed from the per-(file, split) row counts — one tiny row per
-    split — with a cumulative-sum window over THOSE, then broadcast-joined
-    back. The data itself is never globally sorted or single-partitioned
-    (the r1 version's ``Window.orderBy(monotonic_id)`` was; a 10 TB upload
-    would have serialized through one task).
+    One whole-file scan per upload: ``wholetext`` yields one row per
+    file, which is split into lines and ``posexplode``-d, so a file's
+    lines are numbered by the one task that read it. Lines end at CRLF,
+    lone CR or LF, and a trailing terminator does not start an empty last
+    line, as with ``spark.read.text``'s line mode. A file must fit in one
+    row (about 2 GB), thousands of times the reference's 1,000-task cap
+    per batch.
     """
-    lines = spark.read.text(path).select(
-        F.col("value").alias("raw_line"),
-        F.col("_metadata.file_path").alias("_file"),
-        F.spark_partition_id().alias("_split"),
-        F.monotonically_increasing_id().bitwiseAND(F.lit(_MID_RECORD_MASK)).alias("_local"),
-    )
-    counts = lines.groupBy("_file", "_split").agg(F.count(F.lit(1)).alias("_n"))
-    w = (
-        Window.partitionBy("_file")
-        .orderBy("_split")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "_file", "_split", F.coalesce(F.sum("_n").over(w), F.lit(0)).alias("_start")
-    )
-    numbered = (
-        lines.join(F.broadcast(offsets), ["_file", "_split"])
-        .withColumn("task_number", F.col("_start") + F.col("_local") + 1)
-        .drop("_file", "_split", "_local", "_start")
+    files = spark.read.text(path, wholetext=True)
+    lines = F.split(F.col("value"), _LINE_SEP, -1)
+    lines = F.when(
+        F.element_at(lines, -1) == "", F.slice(lines, 1, F.size(lines) - 1)
+    ).otherwise(lines)
+    numbered = files.select(F.posexplode(lines).alias("_pos", "raw_line")).select(
+        (F.col("_pos") + 1).alias("task_number"), "raw_line"
     )
     return parse_task_lines(numbered, batch_id=batch_id)
 

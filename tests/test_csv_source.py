@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.sources.csv_tasks import (
     parse_task_lines,
     read_task_file,
@@ -35,7 +37,8 @@ def test_parse_task_lines_extracts_first_three_fields(spark):
 
 
 def test_read_task_file_numbers_across_splits(spark, tmp_path):
-    """Numbering must be correct when the file scans as multiple splits."""
+    """Numbering must stay correct under a split size that would cut the
+    file into many splits in line mode."""
     p = tmp_path / "many.csv"
     n = 5000
     p.write_text("".join(f"M{i},S{i},A{i}\n" for i in range(1, n + 1)))
@@ -62,7 +65,38 @@ def test_read_task_file_plan_has_no_single_partition_exchange(spark, tmp_path):
     p = tmp_path / "tasks.csv"
     p.write_text("M1,S1,A1\nM2,S2,A2\n")
     plan = plan_string(read_task_file(spark, str(p)))
-    # the line data must never funnel through one partition; the only
-    # exchanges allowed are the tiny per-split counts aggregation + its
-    # window, and the broadcast back
+    # the line data must never funnel through one partition
     assert "Exchange SinglePartition" not in plan
+    # one scan numbers the lines: no shuffle and no broadcast at all
+    assert "Exchange" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "text, expected",
+    [
+        ("M1,S1\r\nM2,S2\r\n", [(1, "M1,S1"), (2, "M2,S2")]),
+        ("M1,S1\rM2,S2\r", [(1, "M1,S1"), (2, "M2,S2")]),
+        ("a\n\nb\n", [(1, "a"), (2, ""), (3, "b")]),
+        ("a\nb\n\n", [(1, "a"), (2, "b"), (3, "")]),
+        ("", []),
+        ("\n", [(1, "")]),
+    ],
+    ids=["crlf", "lone-cr", "blank-middle", "trailing-blank", "empty", "only-lf"],
+)
+def test_read_task_file_line_endings(spark, tmp_path, text, expected):
+    """Line terminators and blank lines number as Spark's line-mode text
+    reader does: CRLF, CR and LF each end a line, blank lines are kept as
+    "", and a trailing terminator does not start an empty last line."""
+    p = tmp_path / "tasks.csv"
+    p.write_bytes(text.encode())
+    rows = read_task_file(spark, str(p)).select("task_number", "raw_line").collect()
+    assert sorted(map(tuple, rows)) == expected
+
+
+def test_read_task_file_numbers_restart_per_file(spark, tmp_path):
+    """A directory of uploads numbers each file's lines from 1."""
+    (tmp_path / "a.csv").write_text("A1,S,X\nA2,S,X\n")
+    (tmp_path / "b.csv").write_text("B1,S,X\nB2,S,X\nB3,S,X\n")
+    rows = read_task_file(spark, str(tmp_path)).collect()
+    got = sorted((r.model_name, r.task_number) for r in rows)
+    assert got == [("A1", 1), ("A2", 2), ("B1", 1), ("B2", 2), ("B3", 3)]

@@ -354,3 +354,10 @@ def test_containment_dominates_jaccard_and_catches_subsets(spark):
     assert r.jaccard < 0.5
     assert r.containment >= r.jaccard
     assert r.n_a < r.n_b
+
+
+def test_minhash_recall_sweep_ignores_repeated_points(spark):
+    """A repeated sweep value gives one row, not a clashing aggregate alias."""
+    docs = _docs(spark, [BASE, NEAR, FAR])
+    rows = dedup.minhash_recall_sweep(docs, bands_sweep=(2, 1, 2)).collect()
+    assert [r.bands for r in rows] == [1, 2]

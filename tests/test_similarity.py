@@ -509,3 +509,12 @@ def test_ivf_auto_nlist_formula():
     # monotone non-decreasing over six decades
     vals = [ivf_auto_nlist(10**k) for k in range(1, 13)]
     assert vals == sorted(vals)
+
+
+def test_ann_sweeps_ignore_repeated_points(spark, sf_dir):
+    """A repeated sweep value gives one row, not a clashing aggregate alias."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    probes = similarity.ann_recall_sweep(emb, nprobes=(4, 2, 4)).collect()
+    assert [r.nprobe for r in probes] == [2, 4]
+    refines = similarity.ann_refine_sweep(emb, refines=(2, 1, 2)).collect()
+    assert [r.refine for r in refines] == [1, 2]
