@@ -19,16 +19,15 @@ STATE_NOT_STARTED = "NOT_STARTED"
 STATE_IN_PROCESS = "IN_PROCESS"
 STATE_SUCCESS = "SUCCESS"
 STATE_COMPLETE_WITH_ERROR = "COMPLETE_WITH_ERROR"
-STATES = [STATE_NOT_STARTED, STATE_IN_PROCESS, STATE_SUCCESS, STATE_COMPLETE_WITH_ERROR]
 
 # Validation limits (reference: AnalyzeBatch.groovy:72-76)
 MAXIMUM_TASK_COUNT = 1000
 MAXIMUM_COMMAS = 2
 
-# Task line regex (reference: AnalyzeBatch.groovy:89 —
-# ``([\w]){1,100},([\w-]){1,200},([\w-]{1,200})``). Kept to constructs with
-# identical semantics in Java regex (Spark) and RE2 (DuckDB oracle).
-TASK_PATTERN = r"^\w{1,100},[\w-]{1,200},[\w-]{1,200}$"
+# Task line field caps (reference: AnalyzeBatch.groovy:89 —
+# ``([\w]){1,100},([\w-]){1,200},([\w-]{1,200})``): model, serial and asset
+# name. ``operators.analyze.validate_tasks`` states the whole task rule as
+# these three caps plus MAXIMUM_COMMAS.
 MODEL_NAME_MAX = 100
 SERIAL_MAX = 200
 ASSET_NAME_MAX = 200

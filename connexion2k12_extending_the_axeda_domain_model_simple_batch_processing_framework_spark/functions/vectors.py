@@ -58,9 +58,3 @@ def dot_expr(a: str, b: str, dim: int) -> Column:
 def l2_norm_expr(a: str, dim: int) -> Column:
     return F.expr(f"sqrt({_dot_sql(a, a, dim)})")
 
-
-def cosine_expr(a: str, b: str, dim: int) -> Column:
-    """Full cosine as one codegen-able expression. For pair joins prefer
-    dot_expr over precomputed per-row norm columns — the norms are per-row
-    facts and must not be recomputed per pair."""
-    return dot_expr(a, b, dim) / (l2_norm_expr(a, dim) * l2_norm_expr(b, dim))

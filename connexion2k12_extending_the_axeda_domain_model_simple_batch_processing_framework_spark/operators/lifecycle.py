@@ -9,7 +9,7 @@ over a million batches on a cluster.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..domain import (
@@ -53,10 +53,10 @@ def list_batches(
     fauxPaginate (GetBatches.groovy:178-188: page/pageSize slicing, with
     page<=0 and pageSize<=0 clamped to 1).
 
-    Pagination over a distributed table is an ORDER BY + LIMIT of
-    page*pageSize followed by dropping the first (page-1)*pageSize rows; the
-    LIMIT bounds what the sort must retain (Spark runs TakeOrderedAndProject,
-    no full global sort materialization).
+    The page is ORDER BY id, OFFSET (page-1)*pageSize, LIMIT pageSize, which
+    Spark plans as one TakeOrderedAndProject(limit, offset): each partition
+    keeps its local top page*pageSize rows and one merge of those drops the
+    offset — no window, no full global sort materialization.
 
     With ``include_total`` the pageInfo contract
     (GetBatches.groovy:194 createPageInfo — pageNumber/pageSize/
@@ -69,14 +69,10 @@ def list_batches(
     page_size = page_size if page_size > 0 else 1
     if state is not None:
         batches = batches.filter(F.col(state_col) == state)
-    end = page_number * page_size
-    w = Window.orderBy(F.col(id_col).asc())
     page = (
         batches.orderBy(F.col(id_col).asc())
-        .limit(end)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > end - page_size)
-        .drop("_rn")
+        .offset((page_number - 1) * page_size)
+        .limit(page_size)
     )
     if include_total:
         total = batches.agg(F.count(F.lit(1)).cast("long").alias("total_results"))

@@ -20,6 +20,15 @@ def distinct_models(tasks: DataFrame) -> DataFrame:
     return tasks.select("model_name").where(F.col("model_name").isNotNull()).distinct()
 
 
+def _with_claim(tasks: DataFrame) -> DataFrame:
+    """Add ``_claim``: the task's 1-based rank among the claimants of its
+    (model_name, serial_number), earliest (batch_id, task_number) first."""
+    w = Window.partitionBy("model_name", "serial_number").orderBy(
+        F.col("batch_id").asc(), F.col("task_number").asc()
+    )
+    return tasks.withColumn("_claim", F.row_number().over(w))
+
+
 def process_tasks(tasks: DataFrame, existing_assets: DataFrame | None = None) -> DataFrame:
     """Run every task: first task (lowest task_number) to claim a
     (model_name, serial_number) wins and creates the asset; subsequent tasks
@@ -32,19 +41,15 @@ def process_tasks(tasks: DataFrame, existing_assets: DataFrame | None = None) ->
     is a broadcast join for dimension-sized asset registries, shuffle join
     otherwise.
     """
-    key = [F.col("model_name"), F.col("serial_number")]
-    w = Window.partitionBy(*key).orderBy(F.col("batch_id").asc(), F.col("task_number").asc())
-    claimed = tasks.withColumn("_claim", F.row_number().over(w))
-
+    claimed = _with_claim(tasks)
+    dup = F.col("_claim") > 1
     if existing_assets is not None:
         existing = existing_assets.select(
             F.col("model_name"), F.col("serial_number"), F.lit(True).alias("_exists")
         )
         claimed = claimed.join(existing, ["model_name", "serial_number"], "left")
-    else:
-        claimed = claimed.withColumn("_exists", F.lit(None).cast("boolean"))
+        dup = dup | F.col("_exists").isNotNull()
 
-    dup = (F.col("_claim") > 1) | F.col("_exists").isNotNull()
     reason = F.when(
         dup,
         F.concat(
@@ -65,11 +70,8 @@ def process_tasks(tasks: DataFrame, existing_assets: DataFrame | None = None) ->
 
 def created_assets(tasks: DataFrame) -> DataFrame:
     """The asset table after processing: the winning claimant per key."""
-    w = Window.partitionBy("model_name", "serial_number").orderBy(
-        F.col("batch_id").asc(), F.col("task_number").asc()
-    )
     return (
-        tasks.withColumn("_claim", F.row_number().over(w))
+        _with_claim(tasks)
         .filter(F.col("_claim") == 1)
         .select("model_name", "serial_number", "asset_name")
     )

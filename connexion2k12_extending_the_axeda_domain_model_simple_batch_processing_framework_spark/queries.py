@@ -36,7 +36,6 @@ D = "decimal(18,2)"
 # ---------------------------------------------------------------------------
 
 #: o_orderstatus → batch lifecycle state (used consistently in Spark + SQL)
-_STATE_MAP = {"O": STATE_NOT_STARTED, "P": STATE_IN_PROCESS, "F": STATE_SUCCESS}
 _STATE_SQL = (
     "CASE o_orderstatus WHEN 'O' THEN 'NOT_STARTED' "
     "WHEN 'P' THEN 'IN_PROCESS' ELSE 'SUCCESS' END"

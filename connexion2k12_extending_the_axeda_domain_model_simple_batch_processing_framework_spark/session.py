@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .sources.catalog import _REQUIRED_CONFS
+
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
@@ -53,41 +55,18 @@ def get_spark(app_name: str = "connexion-batch-engine", cpus: str | None = None)
         # compile cache, not a result cache — every run still computes
         # from parquet, and the value is core-count-independent (per-JVM
         # compile time), so the driver's multi-CPU bench stays comparable.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # JVM code cache for the compiled classes the Janino cache keeps
         # alive: thousands of live generated classes at a 4096-entry
         # codegen cache pressure the JIT's code cache (default 240 MB on
         # JDK17) — the r12 confound. 512m costs virtual reservation only
         # (committed lazily). Only effective before JVM launch (first
         # get_spark in the process).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize="
-            + os.environ.get("SPARK_GRAFT_CODE_CACHE_MB", "512")
-            + "m",
-        )
+        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # InferFiltersFromGenerate derives `size(arr) > 0` from every
-        # explode(); predicate pushdown then inlines the full array-building
-        # expression (tokenize + shingle, with per-element re-evaluation of
-        # the regex split inside higher-order lambdas) into a pre-scan
-        # Filter. Measured 10-20x slowdowns on the shingle-explode dedup
-        # path; the inferred filter saves nothing for our generators (inputs
-        # are already size-filtered), so exclude the rule.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        # the events table carries TIMESTAMP(NANOS) parquet columns. On
-        # Spark <= 4.0 this conf surfaces them as raw longs (unreadable
-        # otherwise); on 4.1+ it is inert and the native read returns
-        # TIMESTAMP_NTZ. sources/catalog.py normalizes either form to
-        # TIMESTAMP under the UTC session timezone below.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        # nanosAsLong, UTC session time zone, InferFiltersFromGenerate
+        # exclusion — declared and explained in sources/catalog.py
+        .config(map=_REQUIRED_CONFS)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

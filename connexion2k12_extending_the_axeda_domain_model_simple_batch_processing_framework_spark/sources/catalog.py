@@ -13,10 +13,10 @@ from pyspark.sql import functions as F
 
 from ..domain import TABLES
 
-# Runtime-settable SQL confs the engine's plans depend on. ``get_spark``
-# sets these at build time, but callers may hand us a foreign SparkSession
-# (a test harness, a notebook) that lacks them — all are plain SQL confs,
-# safe to set on a live session:
+# Runtime-settable SQL confs the engine's plans depend on, declared once.
+# ``get_spark`` sets these at build time, but callers may hand us a foreign
+# SparkSession (a test harness, a notebook) that lacks them — all are plain
+# SQL confs, safe to set on a live session:
 #  - nanosAsLong: on Spark <= 4.0, events.parquet's INT64 TIMESTAMP(NANOS)
 #    is unreadable (PARQUET_TYPE_ILLEGAL) unless surfaced as a raw long;
 #    Spark 4.1+ reads nanos natively as TIMESTAMP_NTZ and ignores this
@@ -25,9 +25,13 @@ from ..domain import TABLES
 #    every hour/date extraction) to UTC wall clock, so results are
 #    identical across Spark versions, host timezones, and the DuckDB
 #    oracle (which computes in naive UTC).
-#  - InferFiltersFromGenerate exclusion: see session.py — the inferred
-#    `size(arr) > 0` filter inlines the whole array-building expression
-#    pre-scan and slows the shingle-explode dedup paths 10-20x.
+#  - InferFiltersFromGenerate exclusion: the rule derives `size(arr) > 0`
+#    from every explode(), and predicate pushdown then inlines the whole
+#    array-building expression (tokenize + shingle, re-evaluating the regex
+#    split inside higher-order lambdas) into a pre-scan Filter. Measured
+#    10-20x slowdowns on the shingle-explode dedup paths; the inferred
+#    filter saves nothing for our generators (inputs are already
+#    size-filtered).
 _REQUIRED_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
@@ -96,10 +100,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _TABLE_CACHE[key] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def write_bucketed(

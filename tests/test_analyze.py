@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import random
+import re
+import string
+
 from pyspark.sql import functions as F
 
 from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.domain import (
@@ -97,9 +101,17 @@ def test_validate_tasks_field_detail(spark):
         (4, "Model,Serial-1,bad name"),          # asset invalid (space)
         (5, "Model,Serial-1"),                   # asset missing
         (6, "a,b,c,d,e"),                        # comma error -> no field
+        # a trailing line terminator is not part of any field: Java's `$`
+        # would accept it, the reference's whole-string match does not
+        (7, "Model,Serial-1,Asset-1\r"),
+        (8, "Model,Serial-1,Asset-1\u0085"),
+        (9, "Model,Serial-1,Asset-1\u2028"),
+        (10, "Model,Serial-1,Asset-1\u2029"),
+        (11, "Model\u2028,Serial-1,Asset-1"),
     ]
     df = spark.createDataFrame(lines, "task_number long, raw_line string")
-    got = {r.task_number: r.field for r in validate_tasks(df).collect()}
+    rows = validate_tasks(df).collect()
+    got = {r.task_number: r.field for r in rows}
     assert got == {
         1: None,
         2: "model_name",
@@ -107,4 +119,40 @@ def test_validate_tasks_field_detail(spark):
         4: "asset_name",
         5: "asset_name",
         6: None,
+        7: "asset_name",
+        8: "asset_name",
+        9: "asset_name",
+        10: "asset_name",
+        11: "model_name",
     }
+    assert {r.task_number for r in rows if r.valid} == {1}
+
+
+def test_validate_tasks_matches_reference_regex(spark):
+    """Seeded random lines: valid iff at most two commas and a whole-string
+    ASCII match of the reference task regex (AnalyzeBatch.groovy:89)."""
+    rng = random.Random(4)
+    word = string.ascii_letters + string.digits + "_"
+    odd = "- ,.\u00e9\r\n\u0085\u2028"
+
+    def field() -> str:
+        n = rng.choice([0, 1, 3, 8, 8, 8, 8, 100, 101, 200, 201])
+        chars = [rng.choice(word) for _ in range(n)]
+        if rng.random() < 0.15:
+            chars.insert(rng.randint(0, len(chars)), rng.choice(odd))
+        return "".join(chars)
+
+    lines = [
+        ",".join(field() for _ in range(rng.choice([1, 2, 3, 3, 3, 3, 3, 3, 4])))
+        for _ in range(5000)
+    ]
+    got = {
+        r.task_number: r.valid
+        for r in validate_tasks(_tasks(spark, lines)).select("task_number", "valid").collect()
+    }
+    reference = re.compile(r"\w{1,100},[\w-]{1,200},[\w-]{1,200}", re.ASCII)
+    want = {
+        i + 1: line.count(",") <= MAXIMUM_COMMAS and reference.fullmatch(line) is not None
+        for i, line in enumerate(lines)
+    }
+    assert got == want

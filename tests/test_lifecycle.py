@@ -3,6 +3,7 @@ GetBatchErrors / BatchIgniter / BatchFinalizer / DeleteBatch parity."""
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -166,3 +167,43 @@ def test_delete_batches_rejected_codes(spark):
     # survivors from the companion operator exclude only the deletable id
     survivors = {r.batch_id for r in lifecycle.delete_batches(batches, criteria).collect()}
     assert survivors == {2, 3}
+
+
+def test_list_batches_pages_match_python_slice_across_partitions(spark):
+    batches = spark.range(1, 2000, numPartitions=7).select(
+        F.col("id").alias("batch_id"),
+        F.when(F.col("id") % 3 == 0, F.lit(STATE_NOT_STARTED))
+        .otherwise(F.lit(STATE_SUCCESS))
+        .alias("state"),
+    )
+    ids = {
+        None: list(range(1, 2000)),
+        STATE_NOT_STARTED: list(range(3, 2000, 3)),
+        STATE_IN_PROCESS: [],  # no row has this state
+    }
+    size = 25
+    cases = []
+    for state, want in ids.items():
+        last = max(-(-len(want) // size), 1)
+        pages = {(p, size) for p in (1, 3, 50, last, last + 1)} | {(0, -3)}
+        cases += [(state, *page, total) for page in sorted(pages) for total in (False, True)]
+
+    def check(case):
+        state, page_number, page_size, include_total = case
+        page = lifecycle.list_batches(
+            batches,
+            state=state,
+            page_number=page_number,
+            page_size=page_size,
+            include_total=include_total,
+        )
+        rows = page.collect()
+        p, n = max(page_number, 1), max(page_size, 1)
+        assert [r.batch_id for r in rows] == ids[state][(p - 1) * n : p * n], case
+        if include_total:
+            assert all(r.total_results == len(ids[state]) for r in rows), case
+        assert "Window" not in page._jdf.queryExecution().executedPlan().toString(), case
+
+    # the 34 small jobs run 4 at a time to keep the test short
+    with ThreadPoolExecutor(4) as pool:
+        list(pool.map(check, cases))
