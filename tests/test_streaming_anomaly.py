@@ -76,7 +76,7 @@ def test_anomaly_stream_state_survives_micro_batches(spark, tmp_path):
     assert [r.zscore for r in out][0] < -anomaly.ANOMALY_Z
 
 
-def test_distinct_users_stream_kmv_matches_small_exact(spark, tmp_path):
+def test_distinct_users_stream_kmv_matches_small_exact(spark, drain_stream, tmp_path):
     """Fewer distinct users than k → the sketch is exact; the estimate
     must keep absorbing new users across micro-batches (merge path)."""
     src = tmp_path / "ev3"
@@ -100,7 +100,7 @@ def test_distinct_users_stream_kmv_matches_small_exact(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain_stream(q)
     rows = spark.sql(
         "SELECT * FROM kmvwin ORDER BY n_seen"
     ).collect()

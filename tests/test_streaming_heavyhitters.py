@@ -47,7 +47,9 @@ def test_space_saving_fold_guarantees():
         assert true[u] <= est <= true[u] + err, (u, true[u], est, err)
 
 
-def test_heavy_users_stream_tracks_heavies_across_batches(spark, tmp_path):
+def test_heavy_users_stream_tracks_heavies_across_batches(
+    spark, drain_stream, tmp_path
+):
     """Drained stream: the per-window top rows contain the true heavy
     users with exact counts (capacity exceeds the distinct count here,
     so Space-Saving degenerates to exact counting), and counts
@@ -75,7 +77,7 @@ def test_heavy_users_stream_tracks_heavies_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain_stream(q)
     rows = spark.sql("SELECT * FROM hhwin ORDER BY n_seen, est_count DESC").collect()
     final_n = max(r.n_seen for r in rows)
     assert final_n == 23  # 14 + 9 events total
@@ -128,7 +130,9 @@ def test_space_saving_fold_property():
     check()
 
 
-def test_heavy_users_stream_drained_equals_batch_topk(spark, sf_dir, tmp_path):
+def test_heavy_users_stream_drained_equals_batch_topk(
+    spark, drain_stream, sf_dir, tmp_path
+):
     """Drained stream ≡ batch: on a capacity-sufficient stream (the
     sf0.001 events table has 15 distinct users < SS_CAPACITY=64, so
     Space-Saving is exact and max_error is 0 everywhere), the drained
@@ -175,7 +179,7 @@ def test_heavy_users_stream_drained_equals_batch_topk(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain_stream(q)
 
     out = spark.sql("SELECT * FROM hhdrain").collect()
     final_n = max(r.n_seen for r in out)

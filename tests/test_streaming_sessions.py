@@ -20,7 +20,7 @@ def _write(path, rows):
             f.write(json.dumps(r) + "\n")
 
 
-def _run(spark, src, tmp_path, name, one_file_per_batch=False):
+def _run(spark, drain, src, tmp_path, name, one_file_per_batch=False):
     reader = spark.readStream.schema(SCHEMA)
     if one_file_per_batch:
         reader = reader.option("maxFilesPerTrigger", 1)
@@ -34,7 +34,7 @@ def _run(spark, src, tmp_path, name, one_file_per_batch=False):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     return spark.sql(f"SELECT * FROM {name}").collect()
 
 
@@ -42,7 +42,7 @@ def _ev(user, eid, value, ts):
     return {"user_id": user, "event_id": eid, "value": value, "ts": ts}
 
 
-def test_session_stream_matches_batch_closed_sessions(spark, tmp_path):
+def test_session_stream_matches_batch_closed_sessions(spark, drain_stream, tmp_path):
     src = tmp_path / "sess1"
     src.mkdir()
     rows = [
@@ -59,7 +59,7 @@ def test_session_stream_matches_batch_closed_sessions(spark, tmp_path):
         _ev(2, 8, -0.5, "2026-01-01T10:00:00"),
     ]
     _write(src / "f0.json", rows)
-    out = _run(spark, src, tmp_path, "sess1")
+    out = _run(spark, drain_stream, src, tmp_path, "sess1")
     got = {
         (r.user_id, r.session_idx): (
             r.session_start.isoformat(),
@@ -97,7 +97,9 @@ def test_session_stream_matches_batch_closed_sessions(spark, tmp_path):
         assert batch[k] == v
 
 
-def test_session_stream_state_survives_micro_batches(spark, tmp_path):
+def test_session_stream_state_survives_micro_batches(
+    spark, drain_stream, tmp_path
+):
     src = tmp_path / "sess2"
     src.mkdir()
     # session spans two micro-batches: must close as ONE 3-event session
@@ -109,7 +111,7 @@ def test_session_stream_state_survives_micro_batches(spark, tmp_path):
         _ev(5, 3, 1.0, "2026-01-01T10:10:00"),   # extends the open session
         _ev(5, 4, 7.0, "2026-01-01T12:00:00"),   # gap -> closes it
     ])
-    out = _run(spark, src, tmp_path, "sess2", one_file_per_batch=True)
+    out = _run(spark, drain_stream, src, tmp_path, "sess2", one_file_per_batch=True)
     assert len(out) == 1
     r = out[0]
     assert (r.user_id, r.session_idx, r.n_events, r.sum_value_cents) == (5, 1, 3, 300)
