@@ -49,11 +49,12 @@ def _persistent_rdd_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
-def _alive(spark) -> bool:
-    """True while the entry's SparkContext is still running. Entries of a
-    stopped session must drop out: their recorded RDD ids are meaningless
-    in a NEW context (ids restart at 0), so a stale entry could exempt an
-    unrelated fresh block from an external reaper."""
+def session_alive(spark) -> bool:
+    """True while the session's SparkContext is still running. Cache
+    entries of a stopped session must drop out: here their recorded RDD
+    ids are meaningless in a NEW context (ids restart at 0), so a stale
+    entry could exempt an unrelated fresh block from an external reaper;
+    ``sources.catalog`` drops its table plans the same way."""
     try:
         return spark.sparkContext._jsc is not None
     except Exception:
@@ -61,13 +62,13 @@ def _alive(spark) -> bool:
 
 
 def _prune_stale() -> None:
-    for k in [k for k, (_v, _ids, s) in _CACHE.items() if not _alive(s)]:
+    for k in [k for k, (_v, _ids, s) in _CACHE.items() if not session_alive(s)]:
         del _CACHE[k]
 
 
 def persistent_exempt_ids() -> set[int]:
     """RDD ids of the storage blocks backing live cache entries (stopped
-    sessions' entries pruned first — see ``_alive``)."""
+    sessions' entries pruned first — see ``session_alive``)."""
     _prune_stale()
     ids: set[int] = set()
     for _value, entry_ids, _spark in _CACHE.values():
@@ -100,7 +101,7 @@ def memo(spark, key, build: Callable[[], tuple]) -> tuple:
         # DataFrames: a build can create auxiliary persisted blocks
         # (e.g. a checkpoint inside the pipeline) that only entry_ids see
         _value, old_ids, old_spark = _CACHE.pop(next(iter(_CACHE)))
-        if not _alive(old_spark):
+        if not session_alive(old_spark):
             continue
         try:
             jmap = old_spark.sparkContext._jsc.getPersistentRDDs()

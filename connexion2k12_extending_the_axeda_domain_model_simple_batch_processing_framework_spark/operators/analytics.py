@@ -1249,9 +1249,7 @@ def q21_waiting_suppliers(
     )
 
 
-def key_skew_report(
-    df: DataFrame, key_col: str = "user_id", exact: bool = False
-) -> DataFrame:
+def key_skew_report(df: DataFrame, exact: bool = False) -> DataFrame:
     """Key-distribution diagnostic — the number every shuffle-sizing and
     salting decision in this engine starts from: per-key row counts
     reduced to (n_rows, n_keys, mean_rows_per_key, max_key_rows,
@@ -1271,7 +1269,7 @@ def key_skew_report(
     ``percentile`` reference, which does buffer every per-key count on
     one reducer — the accuracy baseline, not the >10⁸-key plan.
     """
-    counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("n"))
+    counts = df.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     if exact:
         pct = F.expr("percentile(n, array(0.5, 0.9, 0.99))")
     else:
@@ -2610,9 +2608,7 @@ def category_association(
     )
 
 
-def value_lognormal_fit(
-    orders: DataFrame, col: str = "o_totalprice"
-) -> DataFrame:
+def value_lognormal_fit(orders: DataFrame) -> DataFrame:
     """Log-normal fit of a positive value column (order totals are the
     textbook case): μ and σ of ln(value) — the two numbers that
     parameterize the heavy-tail model pricing and capacity analyses
@@ -2627,10 +2623,10 @@ def value_lognormal_fit(
     map-side-combined 1-row aggregate — no shuffle beyond the partials.
     """
     mln = F.floor(
-        F.log(F.col(col).cast("double")) * 1_000_000 + 0.5
+        F.log(F.col("o_totalprice").cast("double")) * 1_000_000 + 0.5
     ).cast("long")
     dec = "decimal(38,0)"
-    s = orders.filter(F.col(col) > 0).select(mln.alias("x")).agg(
+    s = orders.filter(F.col("o_totalprice") > 0).select(mln.alias("x")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("sx"),
         F.sum(F.col("x").cast(dec) * F.col("x").cast(dec)).alias("sxx"),
@@ -3002,7 +2998,7 @@ def dq_report_diff(current: DataFrame, baseline: DataFrame) -> DataFrame:
     ).orderBy("check_type", "subject", "detail")
 
 
-def benford_audit(orders: DataFrame, col: str = "o_totalprice") -> DataFrame:
+def benford_audit(orders: DataFrame) -> DataFrame:
     """Benford's-law first-significant-digit audit of a positive money
     column — the classic fabricated-data / unit-mixing screen (genuine
     multi-decade amounts follow P(d) = log10(1 + 1/d); a flat or spiky
@@ -3024,7 +3020,7 @@ def benford_audit(orders: DataFrame, col: str = "o_totalprice") -> DataFrame:
     """
     import math
 
-    cents = (F.col(col).cast(D) * 100).cast("long")
+    cents = (F.col("o_totalprice").cast(D) * 100).cast("long")
     # filter on cents, not the raw column: a positive value below 0.005
     # rounds to 0 cents and would otherwise emit a spurious digit-0 row
     digits = (

@@ -30,7 +30,7 @@ def comma_count(col: Column) -> Column:
     return F.length(col) - F.length(F.regexp_replace(col, ",", ""))
 
 
-def validate_tasks(tasks: DataFrame, line_col: str = "raw_line") -> DataFrame:
+def validate_tasks(tasks: DataFrame) -> DataFrame:
     r"""Annotate each task with validity + the reference's error reasons.
 
     Returns the input plus ``n_commas``, ``valid``, ``reason`` and ``field``
@@ -48,7 +48,7 @@ def validate_tasks(tasks: DataFrame, line_col: str = "raw_line") -> DataFrame:
     debugging a rejected upload needs. ``field`` is NULL for valid lines
     and for the line-level comma error (no single field to blame).
     """
-    line = F.col(line_col)
+    line = F.col("raw_line")
     caps = [
         ("model_name", rf"^\w{{1,{MODEL_NAME_MAX}}}\z"),
         ("serial_number", rf"^[\w-]{{1,{SERIAL_MAX}}}\z"),
@@ -84,7 +84,7 @@ def validate_tasks(tasks: DataFrame, line_col: str = "raw_line") -> DataFrame:
     )
 
 
-def analyze_batch(tasks: DataFrame, batch_col: str = "batch_id") -> DataFrame:
+def analyze_batch(tasks: DataFrame) -> DataFrame:
     """Per-batch analysis summary — AnalyzeBatch's success contract
     (``{"result": {"taskCount": N}}``) plus the oversize check
     (error 1030 when taskCount > MAXIMUM_TASK_COUNT).
@@ -93,7 +93,7 @@ def analyze_batch(tasks: DataFrame, batch_col: str = "batch_id") -> DataFrame:
     a single shuffle on batch_id.
     """
     validated = validate_tasks(tasks)
-    return validated.groupBy(batch_col).agg(
+    return validated.groupBy("batch_id").agg(
         F.count(F.lit(1)).alias("task_count"),
         F.sum(F.when(~F.col("valid"), 1).otherwise(0)).alias("invalid_count"),
         (F.count(F.lit(1)) > MAXIMUM_TASK_COUNT).alias("exceeds_maximum"),

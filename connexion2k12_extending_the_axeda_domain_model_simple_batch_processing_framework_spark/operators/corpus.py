@@ -859,7 +859,6 @@ DOMAIN_CAP = 15
 
 def domain_cap(
     documents: DataFrame,
-    url_col: str = "url",
     cap: int = DOMAIN_CAP,
     salt_buckets: int = CAP_SALT_BUCKETS,
 ) -> DataFrame:
@@ -882,10 +881,10 @@ def domain_cap(
     """
     from .text import quality_score
 
-    q = quality_score(documents, keep=(url_col,)).select(
-        "doc_id", url_col, "quality"
+    q = quality_score(documents, keep=("url",)).select(
+        "doc_id", "url", "quality"
     )
-    host = F.regexp_extract(F.col(url_col), "^[a-z]+://([^/]+)", 1)
+    host = F.regexp_extract(F.col("url"), "^[a-z]+://([^/]+)", 1)
     dom = F.regexp_extract(host, "([^.]+\\.[^.]+)$", 1)
     keyed = q.select(
         "doc_id", host.alias("host"), dom.alias("domain"), "quality"
@@ -907,7 +906,6 @@ def domain_cap(
 def blocklist_filter(
     documents: DataFrame,
     blocked_domains: list[str],
-    url_col: str = "url",
 ) -> DataFrame:
     """URL blocklist disposition — the first gate of a crawl-curation
     pipeline (RefinedWeb-style): a document whose registrable domain is on
@@ -922,7 +920,7 @@ def blocklist_filter(
     audit sink instead of vanishing.
     """
     spark = documents.sparkSession
-    host = F.regexp_extract(F.col(url_col), "^[a-z]+://([^/]+)", 1)
+    host = F.regexp_extract(F.col("url"), "^[a-z]+://([^/]+)", 1)
     dom = F.regexp_extract(host, "([^.]+\\.[^.]+)$", 1)
     block = spark.createDataFrame(
         [(d,) for d in blocked_domains], "domain string"

@@ -37,15 +37,15 @@ LSH_ROWS = 3  # NUM_MINHASHES = LSH_BANDS * LSH_ROWS
 SIMHASH_BITS = 16
 
 
-def exact_dedup(documents: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(documents: DataFrame) -> DataFrame:
     """Group identical texts by md5; canonical row = lowest id (first-wins,
     like the reference's create-if-absent model upsert,
     ProcessBatch.groovy:142-153)."""
     return (
-        documents.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
+        documents.select(F.md5(F.col("text")).alias("content_hash"), F.col("doc_id"))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).cast("long").alias("canonical_id"),
+            F.min("doc_id").cast("long").alias("canonical_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -472,8 +472,6 @@ def deletion_variants(col: F.Column) -> F.Column:
 
 def fuzzy_name_pairs(
     entities: DataFrame,
-    name_col: str = "c_name",
-    id_col: str = "c_custkey",
     max_distance: int = 1,
 ) -> DataFrame:
     """Pairs of entities whose names are within Levenshtein distance
@@ -493,7 +491,7 @@ def fuzzy_name_pairs(
     (tiny) matched pair set, not the candidate stream.
     """
     named = spread(entities).select(
-        F.col(id_col).alias("ent_id"), F.col(name_col).alias("name")
+        F.col("c_custkey").alias("ent_id"), F.col("c_name").alias("name")
     )
     ex = named.select(
         "ent_id", "name", F.explode(deletion_variants(F.col("name"))).alias("v")
@@ -699,8 +697,6 @@ SUBSTR_GRAM = 20
 def substring_dedup(
     documents: DataFrame,
     gram_len: int = SUBSTR_GRAM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact substring dedup: remove every maximal token span that appears
     verbatim (as a ``gram_len``-token window) in two or more documents —
@@ -730,7 +726,7 @@ def substring_dedup(
     from pyspark.sql import Window
 
     toked = spread(documents).select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("__toks")
+        F.col("doc_id"), tokens(F.col("text")).alias("__toks")
     )
     ex = toked.filter(F.size("__toks") >= gram_len).select(
         "doc_id",

@@ -19,8 +19,11 @@ from ..domain import (
     STATE_SUCCESS,
 )
 
+#: Spark's offset and limit are 32-bit ints, and so is their sum
+_MAX_INT = 2**31 - 1
 
-def batch_status(batches: DataFrame, results: DataFrame, batch_key: str = "batch_id") -> DataFrame:
+
+def batch_status(batches: DataFrame, results: DataFrame) -> DataFrame:
     """GetBatch.groovy response shape: per-batch completed/success/error
     counts joined to the anchor row.
 
@@ -29,13 +32,13 @@ def batch_status(batches: DataFrame, results: DataFrame, batch_key: str = "batch
     a co-partitioned shuffle join otherwise — both sides keyed identically
     so AQE can pick.
     """
-    counts = results.groupBy(batch_key).agg(
+    counts = results.groupBy("batch_id").agg(
         F.count(F.lit(1)).alias("completed_count"),
         F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("success_count"),
         F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("error_count"),
     )
     return (
-        batches.join(counts, batch_key, "left")
+        batches.join(counts, "batch_id", "left")
         .fillna(0, ["completed_count", "success_count", "error_count"])
     )
 
@@ -45,8 +48,6 @@ def list_batches(
     state: str | None = None,
     page_number: int = 1,
     page_size: int = 10,
-    id_col: str = "batch_id",
-    state_col: str = "state",
     include_total: bool = False,
 ) -> DataFrame:
     """GetBatches.groovy: optional state filter, sort by id ascending, then
@@ -58,6 +59,12 @@ def list_batches(
     keeps its local top page*pageSize rows and one merge of those drops the
     offset — no window, no full global sort materialization.
 
+    Spark's offset and limit are 32-bit ints whose sum may not pass
+    2^31-1, while GetBatches takes page and pageSize from the request: an
+    offset at or past 2^31-1 returns an empty page with the same columns,
+    and the limit is cut to 2^31-1 minus the offset. Both are exact for an
+    anchor table with fewer than 2^31-1 rows.
+
     With ``include_total`` the pageInfo contract
     (GetBatches.groovy:194 createPageInfo — pageNumber/pageSize/
     totalResults) rides along as constant columns: the total is a count
@@ -68,12 +75,16 @@ def list_batches(
     page_number = page_number if page_number > 0 else 1
     page_size = page_size if page_size > 0 else 1
     if state is not None:
-        batches = batches.filter(F.col(state_col) == state)
-    page = (
-        batches.orderBy(F.col(id_col).asc())
-        .offset((page_number - 1) * page_size)
-        .limit(page_size)
-    )
+        batches = batches.filter(F.col("state") == state)
+    offset = (page_number - 1) * page_size
+    if offset >= _MAX_INT:
+        page = batches.limit(0)
+    else:
+        page = (
+            batches.orderBy(F.col("batch_id").asc())
+            .offset(offset)
+            .limit(min(page_size, _MAX_INT - offset))
+        )
     if include_total:
         total = batches.agg(F.count(F.lit(1)).cast("long").alias("total_results"))
         page = (
@@ -84,16 +95,14 @@ def list_batches(
     return page
 
 
-def batch_errors(
-    results: DataFrame, batch_key: str = "batch_id", task_col: str = "task_number"
-) -> DataFrame:
+def batch_errors(results: DataFrame) -> DataFrame:
     """GetBatchErrors.groovy response: per failed task, errorCount and the
     reason list. Reasons are emitted as a deterministically sorted
     comma-joined string so distributed collect order can't leak into
     results."""
     return (
         results.filter(~F.col("ok"))
-        .groupBy(batch_key, task_col)
+        .groupBy("batch_id", "task_number")
         .agg(
             F.count(F.lit(1)).alias("error_count"),
             F.array_join(F.array_sort(F.collect_list("reason")), "; ").alias("reasons"),
@@ -104,9 +113,6 @@ def batch_errors(
 def igniter_pick(
     batches: DataFrame,
     pool_size: int,
-    state_col: str = "state",
-    inception_col: str = "inception_time",
-    id_col: str = "batch_id",
 ) -> DataFrame:
     """BatchIgniter.groovy: take the ``pool_size`` oldest NOT_STARTED batches
     ordered by inceptionTime (id as tiebreak for determinism).
@@ -115,8 +121,8 @@ def igniter_pick(
     merges K*partitions rows — no global sort even at a billion batches.
     """
     return (
-        batches.filter(F.col(state_col) == STATE_NOT_STARTED)
-        .orderBy(F.col(inception_col).asc(), F.col(id_col).asc())
+        batches.filter(F.col("state") == STATE_NOT_STARTED)
+        .orderBy(F.col("inception_time").asc(), F.col("batch_id").asc())
         .limit(pool_size)
     )
 
@@ -124,8 +130,6 @@ def igniter_pick(
 def finalize_batches(
     batches: DataFrame,
     results: DataFrame,
-    batch_key: str = "batch_id",
-    size_col: str = "size",
 ) -> DataFrame:
     """BatchFinalizer.groovy: a batch is complete when completed==size;
     final state is SUCCESS with zero errors else COMPLETE_WITH_ERROR
@@ -134,8 +138,8 @@ def finalize_batches(
 
     Returns the anchor table with derived ``final_state`` and counts.
     """
-    status = batch_status(batches, results, batch_key)
-    complete = F.col("completed_count") >= F.col(size_col)
+    status = batch_status(batches, results)
+    complete = F.col("completed_count") >= F.col("size")
     return status.withColumn(
         "final_state",
         F.when(complete & (F.col("error_count") == 0), F.lit(STATE_SUCCESS))
@@ -147,25 +151,23 @@ def finalize_batches(
 def delete_batches(
     batches: DataFrame,
     criteria_ids: DataFrame,
-    id_col: str = "batch_id",
-    state_col: str = "state",
 ) -> DataFrame:
     """DeleteBatch.groovy: only NOT_STARTED batches may be deleted; returns
-    the surviving anchor table. Deletable set = criteria ∩ NOT_STARTED,
-    removed via LEFT ANTI join (criteria side broadcast when small)."""
-    deletable = criteria_ids.join(
-        batches.filter(F.col(state_col) == STATE_NOT_STARTED).select(id_col),
-        id_col,
-        "inner",
+    the surviving anchor table. One LEFT ANTI join against the broadcast
+    criteria drops a batch whose id is requested and whose state is
+    NOT_STARTED, so the anchors are scanned once."""
+    requested = criteria_ids.select(F.col("batch_id").alias("_delete_id"))
+    return batches.join(
+        F.broadcast(requested),
+        (F.col("batch_id") == F.col("_delete_id"))
+        & (F.col("state") == STATE_NOT_STARTED),
+        "left_anti",
     )
-    return batches.join(F.broadcast(deletable), id_col, "left_anti")
 
 
 def delete_batches_rejected(
     batches: DataFrame,
     criteria_ids: DataFrame,
-    id_col: str = "batch_id",
-    state_col: str = "state",
 ) -> DataFrame:
     """DeleteBatch.groovy error contract: per requested id that was NOT
     deleted, the error code + message — 1020 when the batch exists in a
@@ -173,13 +175,13 @@ def delete_batches_rejected(
     that id exists (DeleteBatch.groovy:116). Companion to
     ``delete_batches`` (which returns the survivors): a left join of the
     criteria against the anchor table, filtered to the rejections."""
-    anchor = batches.select(F.col(id_col), F.col(state_col).alias("_state"))
+    anchor = batches.select(F.col("batch_id"), F.col("state").alias("_state"))
     return (
-        criteria_ids.select(id_col)
-        .join(anchor, id_col, "left")
+        criteria_ids.select("batch_id")
+        .join(anchor, "batch_id", "left")
         .filter(F.col("_state").isNull() | (F.col("_state") != STATE_NOT_STARTED))
         .select(
-            id_col,
+            "batch_id",
             F.when(F.col("_state").isNull(), F.lit("1002"))
             .otherwise(F.lit("1020"))
             .alias("error_code"),
@@ -187,7 +189,7 @@ def delete_batches_rejected(
                 F.col("_state").isNull(),
                 F.concat(
                     F.lit("Unable to delete batch because the batch with ID = '"),
-                    F.col(id_col).cast("string"),
+                    F.col("batch_id").cast("string"),
                     F.lit("' could not be found."),
                 ),
             )
@@ -206,12 +208,12 @@ def delete_batches_rejected(
     )
 
 
-def mark_in_process(batches: DataFrame, ignited_ids: DataFrame, id_col: str = "batch_id") -> DataFrame:
+def mark_in_process(batches: DataFrame, ignited_ids: DataFrame) -> DataFrame:
     """ProcessBatch.groovy markBatchInProgress, set-based: batches whose id
     appears in ignited_ids move NOT_STARTED → IN_PROCESS."""
-    flagged = ignited_ids.select(F.col(id_col), F.lit(True).alias("_ignite"))
+    flagged = ignited_ids.select(F.col("batch_id"), F.lit(True).alias("_ignite"))
     return (
-        batches.join(F.broadcast(flagged), id_col, "left")
+        batches.join(F.broadcast(flagged), "batch_id", "left")
         .withColumn(
             "state",
             F.when(

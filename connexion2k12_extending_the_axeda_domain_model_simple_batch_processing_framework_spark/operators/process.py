@@ -77,17 +77,13 @@ def created_assets(tasks: DataFrame) -> DataFrame:
     )
 
 
-def latest_wins_merge(
-    base: DataFrame,
-    updates: DataFrame,
-    key_col: str = "doc_id",
-    version_col: str = "version",
-) -> DataFrame:
+def latest_wins_merge(base: DataFrame, updates: DataFrame) -> DataFrame:
     """Snapshot merge with LAST-writer-wins semantics — the CDC-compaction
     twin of ``process_tasks``' first-wins claim: a base snapshot plus an
-    updates batch collapse to one row per key, the row with the highest
-    (version, is_update) pair. An update at the same version as base wins
-    (updates are the newer feed); within a side the highest version wins.
+    updates batch collapse to one row per ``doc_id``, the row with the
+    highest (version, is_update) pair. An update at the same version as
+    base wins (updates are the newer feed); within a side the highest
+    version wins.
 
     This is the MERGE INTO / upsert-compaction every incremental corpus
     needs when a crawler re-fetches pages: schema-aligned union, one
@@ -96,14 +92,14 @@ def latest_wins_merge(
     ``src`` marker ('base' | 'update') so audits can count effective
     overwrites.
 
-    Column contract: both inputs share the same schema (plus key/version);
-    output = that schema + src.
+    Column contract: both inputs share the same schema (with doc_id and
+    version); output = that schema + src.
     """
     tagged = base.withColumn("src", F.lit("base")).unionByName(
         updates.withColumn("src", F.lit("update"))
     )
-    pick = Window.partitionBy(key_col).orderBy(
-        F.col(version_col).desc(),
+    pick = Window.partitionBy("doc_id").orderBy(
+        F.col("version").desc(),
         F.when(F.col("src") == "update", 1).otherwise(0).desc(),
     )
     return (
@@ -115,9 +111,6 @@ def latest_wins_merge(
 
 def scd2_build(
     updates: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "valid_from",
-    tie_col: str = "event_id",
     op_col: str | None = None,
     delete_value: str = "D",
 ) -> DataFrame:
@@ -129,11 +122,12 @@ def scd2_build(
     reference implies by storing per-task anchors instead of overwriting,
     cf. internal/ProcessBatch.groovy:142-187).
 
-    Adds: ``dim_version`` (1-based per key, ordered by (ts, tie)),
-    ``valid_from`` (= ts), ``valid_to`` (next version's valid_from; NULL =
-    open/current) and ``is_current``. Two updates at the same (key, ts)
-    produce a zero-width interval for the lower ``tie_col`` — matched by no
-    point-in-time probe, exactly the overwritten-in-same-instant semantics.
+    Updates carry (user_id, valid_from, event_id). Adds: ``dim_version``
+    (1-based per user_id, ordered by (valid_from, event_id)), ``valid_to``
+    (next version's valid_from; NULL = open/current) and ``is_current``.
+    Two updates at the same (user_id, valid_from) produce a zero-width
+    interval for the lower ``event_id`` — matched by no point-in-time
+    probe, exactly the overwritten-in-same-instant semantics.
 
     ONE shuffle on the key; version numbering and the interval close are
     chained Window ops over the same partitioning (single Exchange).
@@ -149,21 +143,19 @@ def scd2_build(
     numbering windows over the filtered upserts, both on the SAME
     partitioning (one Exchange, one sort).
     """
-    w = Window.partitionBy(key_col).orderBy(ts_col, tie_col)
+    w = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
     if op_col is None:
         return (
             updates.withColumn("dim_version", F.row_number().over(w).cast("long"))
-            .withColumn("valid_from", F.col(ts_col))
-            .withColumn("valid_to", F.lead(ts_col).over(w))
+            .withColumn("valid_to", F.lead("valid_from").over(w))
             .withColumn("is_current", F.col("valid_to").isNull())
         )
     # ANY event (upsert or tombstone) closes the previous interval;
     # only upserts become version rows
-    closed = updates.withColumn("valid_to", F.lead(ts_col).over(w))
+    closed = updates.withColumn("valid_to", F.lead("valid_from").over(w))
     live = closed.filter(F.col(op_col) != F.lit(delete_value))
     return (
         live.withColumn("dim_version", F.row_number().over(w).cast("long"))
-        .withColumn("valid_from", F.col(ts_col))
         .withColumn("is_current", F.col("valid_to").isNull())
     )
 
@@ -171,12 +163,8 @@ def scd2_build(
 def scd2_point_in_time(
     dim_updates: DataFrame,
     facts: DataFrame,
-    key_col: str = "user_id",
-    dim_ts_col: str = "valid_from",
-    dim_tie_col: str = "event_id",
     fact_ts_col: str = "ts",
     fact_tie_col: str = "fact_id",
-    attr_cols: tuple[str, ...] = ("score",),
     op_col: str | None = None,
     delete_value: str = "D",
 ) -> DataFrame:
@@ -199,36 +187,29 @@ def scd2_point_in_time(
     (much smaller) shuffle for version numbering. Equal-timestamp
     semantics match interval containment exactly: dim rows sort before
     facts at the same instant (ASOF ``>=``), and among same-instant dim
-    rows the last carried is the highest ``tie_col`` — the one whose
+    rows the last carried is the highest ``event_id`` — the one whose
     interval is non-zero-width.
 
     Facts before the key's first version keep NULL dimension columns
     (LEFT point-in-time join). Output: all ``facts`` columns +
-    (dim_version, valid_from, *attr_cols).
+    (dim_version, valid_from, score).
     """
-    versioned = scd2_build(
-        dim_updates, key_col, dim_ts_col, dim_tie_col, op_col, delete_value
-    )
+    versioned = scd2_build(dim_updates, op_col, delete_value)
     tombstones = (
         dim_updates.filter(F.col(op_col) == F.lit(delete_value))
         if op_col is not None
         else None
     )
     return scd2_point_in_time_from(
-        versioned, facts, key_col, dim_ts_col, dim_tie_col,
-        fact_ts_col, fact_tie_col, attr_cols, tombstones,
+        versioned, facts, fact_ts_col, fact_tie_col, tombstones
     )
 
 
 def scd2_point_in_time_from(
     versioned: DataFrame,
     facts: DataFrame,
-    key_col: str = "user_id",
-    dim_ts_col: str = "valid_from",
-    dim_tie_col: str = "event_id",
     fact_ts_col: str = "ts",
     fact_tie_col: str = "fact_id",
-    attr_cols: tuple[str, ...] = ("score",),
     tombstones: DataFrame | None = None,
 ) -> DataFrame:
     """The enrichment half of ``scd2_point_in_time`` over an ALREADY-built
@@ -239,24 +220,24 @@ def scd2_point_in_time_from(
     log. Same union/carry-forward plan (facts shuffle once, never
     replicated across version history).
 
-    ``tombstones`` (rows with at least ``key_col``/``dim_ts_col``/
-    ``dim_tie_col``) ride the dim side as carried DELETED markers: a fact
-    whose last-carried dim event is a tombstone resolves to NULL
-    dimension columns — ignore-nulls ``last`` alone cannot express a
-    delete, because a NULL payload would be skipped instead of carried.
+    ``tombstones`` (rows with at least user_id/valid_from/event_id) ride
+    the dim side as carried DELETED markers: a fact whose last-carried dim
+    event is a tombstone resolves to NULL dimension columns — ignore-nulls
+    ``last`` alone cannot express a delete, because a NULL payload would
+    be skipped instead of carried.
     """
     attr_types = {f.name: f.dataType for f in versioned.schema.fields}
     payload = F.struct(
         F.lit(False).alias("__del"),
         F.col("dim_version"),
         F.col("valid_from"),
-        *[F.col(c) for c in attr_cols],
+        F.col("score"),
     )
     dim_side = versioned.select(
-        F.col(key_col).alias("__key"),
-        F.col(dim_ts_col).alias("__ts"),
+        F.col("user_id").alias("__key"),
+        F.col("valid_from").alias("__ts"),
         F.lit(0).alias("__tag"),
-        F.col(dim_tie_col).cast("long").alias("__tie"),
+        F.col("event_id").cast("long").alias("__tie"),
         payload.alias("__dim"),
         *[F.lit(None).cast(f.dataType).alias(f.name) for f in facts.schema.fields],
     )
@@ -264,15 +245,15 @@ def scd2_point_in_time_from(
         tomb_payload = F.struct(
             F.lit(True).alias("__del"),
             F.lit(None).cast("long").alias("dim_version"),
-            F.lit(None).cast(attr_types[dim_ts_col]).alias("valid_from"),
-            *[F.lit(None).cast(attr_types[c]).alias(c) for c in attr_cols],
+            F.lit(None).cast(attr_types["valid_from"]).alias("valid_from"),
+            F.lit(None).cast(attr_types["score"]).alias("score"),
         )
         dim_side = dim_side.unionByName(
             tombstones.select(
-                F.col(key_col).alias("__key"),
-                F.col(dim_ts_col).alias("__ts"),
+                F.col("user_id").alias("__key"),
+                F.col("valid_from").alias("__ts"),
                 F.lit(0).alias("__tag"),
-                F.col(dim_tie_col).cast("long").alias("__tie"),
+                F.col("event_id").cast("long").alias("__tie"),
                 tomb_payload.alias("__dim"),
                 *[
                     F.lit(None).cast(f.dataType).alias(f.name)
@@ -281,7 +262,7 @@ def scd2_point_in_time_from(
             )
         )
     fact_side = facts.select(
-        F.col(key_col).alias("__key"),
+        F.col("user_id").alias("__key"),
         F.col(fact_ts_col).alias("__ts"),
         F.lit(1).alias("__tag"),
         F.col(fact_tie_col).cast("long").alias("__tie"),
@@ -306,10 +287,7 @@ def scd2_point_in_time_from(
             *[F.col(f.name) for f in facts.schema.fields],
             F.when(alive, F.col("__carried.dim_version")).alias("dim_version"),
             F.when(alive, F.col("__carried.valid_from")).alias("valid_from"),
-            *[
-                F.when(alive, F.col(f"__carried.{c}")).alias(c)
-                for c in attr_cols
-            ],
+            F.when(alive, F.col("__carried.score")).alias("score"),
         )
     )
 
@@ -318,10 +296,6 @@ def scd2_snapshot_diff(
     updates: DataFrame,
     t1: str,
     t2: str,
-    key_col: str = "user_id",
-    ts_col: str = "valid_from",
-    tie_col: str = "event_id",
-    value_col: str = "score",
     op_col: str | None = None,
     delete_value: str = "D",
 ) -> DataFrame:
@@ -337,11 +311,11 @@ def scd2_snapshot_diff(
     Plan: ONE ``scd2_build`` (one keyed shuffle); both as-of states are
     filters over the SAME interval table, so the exchange is reused
     across the two branches, and the full-outer diff join is keyed on
-    ``key_col`` — co-partitioned with the build, no extra wide shuffle
+    ``user_id`` — co-partitioned with the build, no extra wide shuffle
     of the history. Zero-width same-instant intervals match neither
     probe, the ``scd2_point_in_time`` convention.
     """
-    hist = scd2_build(updates, key_col, ts_col, tie_col, op_col, delete_value)
+    hist = scd2_build(updates, op_col, delete_value)
 
     def state_at(t: str, side: str) -> DataFrame:
         probe = F.lit(t).cast("timestamp")
@@ -349,12 +323,12 @@ def scd2_snapshot_diff(
             (F.col("valid_from") <= probe)
             & (F.col("valid_to").isNull() | (probe < F.col("valid_to")))
         ).select(
-            F.col(key_col),
+            F.col("user_id"),
             F.col("dim_version").alias(f"version_{side}"),
-            F.col(value_col).alias(f"value_{side}"),
+            F.col("score").alias(f"value_{side}"),
         )
 
-    joined = state_at(t1, "t1").join(state_at(t2, "t2"), key_col, "full_outer")
+    joined = state_at(t1, "t1").join(state_at(t2, "t2"), "user_id", "full_outer")
     change = (
         F.when(F.col("version_t1").isNull(), F.lit("added"))
         .when(F.col("version_t2").isNull(), F.lit("removed"))
@@ -362,7 +336,7 @@ def scd2_snapshot_diff(
         .otherwise(F.lit("changed"))
     )
     return joined.select(
-        key_col,
+        "user_id",
         change.alias("change"),
         "version_t1",
         "version_t2",

@@ -30,8 +30,6 @@ def hash_bucket(id_col: F.Column, buckets: int = 100) -> F.Column:
 def stratified_sample(
     documents: DataFrame,
     rates: dict[str, int] | None = None,
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
     default_rate: int = 0,
 ) -> DataFrame:
     """Per-stratum deterministic percentage sample.
@@ -44,8 +42,8 @@ def stratified_sample(
     rates = DEFAULT_LANG_RATES if rates is None else rates
     rate = F.lit(default_rate)
     for stratum, pct in rates.items():
-        rate = F.when(F.col(strata_col) == stratum, F.lit(pct)).otherwise(rate)
-    bucket = hash_bucket(F.col(id_col))
+        rate = F.when(F.col("lang") == stratum, F.lit(pct)).otherwise(rate)
+    bucket = hash_bucket(F.col("doc_id"))
     return (
         documents.withColumn("sample_rate", rate.cast("long"))
         .withColumn("bucket", bucket.cast("long"))
@@ -61,7 +59,6 @@ def train_val_test_split(
     documents: DataFrame,
     train_pct: int = DEFAULT_SPLIT_PCT[0],
     val_pct: int = DEFAULT_SPLIT_PCT[1],
-    id_col: str = "doc_id",
     salt: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment by salted id hash.
@@ -75,7 +72,7 @@ def train_val_test_split(
     single scan, no shuffle.
     """
     bucket = F.pmod(
-        hex_hash64(F.col(id_col).cast("string"), F.lit(salt)), F.lit(100)
+        hex_hash64(F.col("doc_id").cast("string"), F.lit(salt)), F.lit(100)
     )
     split = (
         F.when(bucket < train_pct, F.lit("train"))
@@ -96,7 +93,6 @@ def mixture_sample(
     target_shares: dict[str, float] | None = None,
     default_share: float = 0.0,
     strata_col: str = "source",
-    id_col: str = "doc_id",
     salt: str = "mix",
 ) -> DataFrame:
     """Rebalance the corpus to TARGET per-stratum shares — the mixture
@@ -132,14 +128,14 @@ def mixture_sample(
         strata_col, F.col("n_s").cast("long").alias("n_s"), rate_micro.alias("rate_micro")
     )
     bucket = F.pmod(
-        hex_hash64(F.col(id_col).cast("string"), F.lit(salt)), F.lit(MIX_BUCKETS)
+        hex_hash64(F.col("doc_id").cast("string"), F.lit(salt)), F.lit(MIX_BUCKETS)
     )
     return (
-        documents.select(id_col, strata_col)
+        documents.select("doc_id", strata_col)
         .join(F.broadcast(rates), strata_col)
         .withColumn("bucket", bucket.cast("long"))
         .filter(F.col("bucket") < F.col("rate_micro"))
-        .select(id_col, strata_col, "n_s", "rate_micro", "bucket")
+        .select("doc_id", strata_col, "n_s", "rate_micro", "bucket")
     )
 
 
@@ -194,9 +190,8 @@ WSAMPLE_K = 400
 def weighted_systematic_sample(
     documents: DataFrame,
     k: int = WSAMPLE_K,
-    weight_col: str = "n_chars",
 ) -> DataFrame:
-    """Sample ``k`` picks with probability proportional to ``weight_col``
+    """Sample ``k`` picks with probability proportional to ``n_chars``
     (size-proportional sampling — "sample documents by length so tokens,
     not documents, are uniform"), deterministically and in pure INTEGER
     arithmetic: no ``rand()``, no float ``u^(1/w)`` keys whose last-ulp
@@ -223,7 +218,7 @@ def weighted_systematic_sample(
     exact, unlike a scaled decimal true-division whose HALF_UP rounding
     at the result scale could lift a just-below-integer quotient.
     """
-    w = F.col(weight_col).cast("long")
+    w = F.col("n_chars").cast("long")
     d = documents.filter(w > 0).select(
         "doc_id",
         "lang",

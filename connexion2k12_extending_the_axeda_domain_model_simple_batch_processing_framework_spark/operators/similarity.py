@@ -43,8 +43,6 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k of each query over the corpus (self excluded).
 
@@ -52,10 +50,10 @@ def brute_force_topk(
     join evaluates only the codegen'd dot product.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).withColumn("q_norm", l2_norm_expr("q_vec", EMBEDDING_DIM))
     c = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     ).withColumn("c_norm", l2_norm_expr("c_vec", EMBEDDING_DIM))
     # round-ok: cosine — the norm product passes through correctly-rounded
     # sqrt of non-square rationals, so no exact decimal midpoint exists
@@ -124,8 +122,6 @@ def signature_table(
     df: DataFrame,
     id_out: str,
     vec_out: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     planes: int = LSH_PLANES,
 ) -> DataFrame:
     """(id, bucket, vec) with the hyperplane LSH bucket computed in one
@@ -144,9 +140,9 @@ def signature_table(
     fields = {f.name: f for f in df.schema.fields}
     out_schema = StructType(
         [
-            StructField(id_out, fields[id_col].dataType),
+            StructField(id_out, fields["vec_id"].dataType),
             StructField("bucket", LongType()),
-            StructField(vec_out, fields[vec_col].dataType),
+            StructField(vec_out, fields["embedding"].dataType),
         ]
     )
 
@@ -154,7 +150,7 @@ def signature_table(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             acc = np.zeros((len(V), len(S)))
             for i in range(V.shape[1]):
                 acc += V[:, i, None] * S.T[None, i, :]
@@ -163,13 +159,13 @@ def signature_table(
             # numpy's NaN >= 0 is False and would flip it
             yield pd.DataFrame(
                 {
-                    id_out: pdf[id_col],
+                    id_out: pdf["vec_id"],
                     "bucket": (~(acc < 0)).astype(np.int64) @ pows,
-                    vec_out: pdf[vec_col],
+                    vec_out: pdf["embedding"],
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(sign_batches, out_schema)
+    return df.select("vec_id", "embedding").mapInPandas(sign_batches, out_schema)
 
 
 def lsh_topk(
@@ -177,8 +173,6 @@ def lsh_topk(
     queries: DataFrame,
     k: int = 5,
     planes: int = LSH_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: bucket corpus and queries by hyperplane signature,
     rank only within the bucket. Recall < 1 by design; the candidate scan
@@ -186,10 +180,10 @@ def lsh_topk(
     Arrow-batched ``signature_table`` (bit-identical to the expression
     form); only the few in-bucket candidates pay the codegen'd cosine."""
     c = signature_table(
-        spread(corpus), "neighbor_id", "c_vec", id_col, vec_col, planes
+        spread(corpus), "neighbor_id", "c_vec", planes=planes
     ).withColumn("c_norm", l2_norm_expr("c_vec", EMBEDDING_DIM))
     q = signature_table(
-        queries, "query_id", "q_vec", id_col, vec_col, planes
+        queries, "query_id", "q_vec", planes=planes
     ).withColumnRenamed("bucket", "q_bucket").withColumn(
         "q_norm", l2_norm_expr("q_vec", EMBEDDING_DIM)
     )
@@ -213,8 +207,6 @@ def lsh_topk(
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact: bool = False,
 ) -> DataFrame:
     """Pairs with cosine ≥ threshold.
@@ -231,14 +223,14 @@ def embedding_near_dup_pairs(
     """
     embeddings = spread(embeddings)
     if exact:
-        return _exact_pairs_arrow(embeddings, threshold, id_col, vec_col)
+        return _exact_pairs_arrow(embeddings, threshold)
     # round-ok: cosine — the norm product passes through correctly-rounded
     # sqrt of non-square rationals, so no exact decimal midpoint exists
     cos = F.round(dot_expr("va", "vb", EMBEDDING_DIM) / (F.col("na") * F.col("nb")), 6)
-    a = signature_table(embeddings, "vec_a", "va", id_col, vec_col).withColumn(
+    a = signature_table(embeddings, "vec_a", "va").withColumn(
         "na", l2_norm_expr("va", EMBEDDING_DIM)
     )
-    b = signature_table(embeddings, "vec_b", "vb", id_col, vec_col).withColumn(
+    b = signature_table(embeddings, "vec_b", "vb").withColumn(
         "nb", l2_norm_expr("vb", EMBEDDING_DIM)
     )
     joined = a.join(
@@ -287,9 +279,7 @@ def _seq_sq_sums(M: "np.ndarray") -> "np.ndarray":
     return acc
 
 
-def _exact_pairs_arrow(
-    embeddings: DataFrame, threshold: float, id_col: str, vec_col: str
-) -> DataFrame:
+def _exact_pairs_arrow(embeddings: DataFrame, threshold: float) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold as one Arrow-batched corpus scan.
 
     The corpus (collected once — the exact path is the CORRECTNESS ANCHOR
@@ -311,7 +301,7 @@ def _exact_pairs_arrow(
             "(embedding_near_dup_pairs(exact=False) / dedup_embedding_lsh) "
             "at corpus scale."
         )
-    rows = embeddings.select(id_col, vec_col).collect()
+    rows = embeddings.select("vec_id", "embedding").collect()
     if not rows:  # empty corpus → empty pairs, not a shape error
         return embeddings.sparkSession.createDataFrame(
             [], "vec_a long, vec_b long, cosine double"
@@ -324,8 +314,8 @@ def _exact_pairs_arrow(
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            a_ids = pdf[id_col].to_numpy()
+            A = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+            a_ids = pdf["vec_id"].to_numpy()
             cos = _round_half_away(
                 _seq_dot(A, M) / np.outer(_seq_norms(A), m_norms), 6
             )
@@ -340,7 +330,7 @@ def _exact_pairs_arrow(
                 }
             )
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
+    return embeddings.select("vec_id", "embedding").mapInPandas(
         score_batches, "vec_a long, vec_b long, cosine double"
     )
 
@@ -400,9 +390,7 @@ def ivf_auto_nlist(n_vectors: int) -> int:
     )
 
 
-def _resolve_nlist(
-    corpus: DataFrame, nlist: int | None, id_col: str, vec_col: str
-) -> int:
+def _resolve_nlist(corpus: DataFrame, nlist: int | None) -> int:
     """``nlist=None`` (the default across the IVF family) derives
     ``ivf_auto_nlist(count)``; an explicit integer passes through. The
     count is memoized per (session, canonical plan) so every consumer of
@@ -415,7 +403,7 @@ def _resolve_nlist(
     try:
         key = (
             weakref.ref(corpus.sparkSession),
-            corpus.select(id_col, vec_col).semanticHash(),
+            corpus.select("vec_id", "embedding").semanticHash(),
         )
     except Exception:
         return ivf_auto_nlist(corpus.count())
@@ -430,8 +418,6 @@ def ivf_centroids(
     corpus: DataFrame,
     nlist: int | None = None,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_cap: int = IVF_TRAIN_CAP,
 ) -> DataFrame:
     """K-means centroids for an IVF index, trained on a deterministic
@@ -454,12 +440,12 @@ def ivf_centroids(
     would shuffle the corpus 3 extra times for a quantizer a sample trains
     equally well.
     """
-    nlist = _resolve_nlist(corpus, nlist, id_col, vec_col)
+    nlist = _resolve_nlist(corpus, nlist)
     rows = (
         corpus.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("v"),
-            hex_hash64(F.col(id_col).cast("string")).alias("h"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").alias("v"),
+            hex_hash64(F.col("vec_id").cast("string")).alias("h"),
         )
         .orderBy("h", "vid")
         .limit(train_cap)
@@ -562,8 +548,6 @@ def ivf_build(
     corpus: DataFrame,
     nlist: int | None = None,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """Build the IVF index once: k-means centroids + the inverted file.
 
@@ -575,10 +559,10 @@ def ivf_build(
     (e.g. parquet partitioned by centroid_id) and probe many times; here
     they're lineage-cut in memory.
     """
-    nlist = _resolve_nlist(corpus, nlist, id_col, vec_col)
+    nlist = _resolve_nlist(corpus, nlist)
     corpus = spread(corpus)
-    centroids = ivf_centroids(corpus, nlist, iters, id_col, vec_col)
-    c = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("cv"))
+    centroids = ivf_centroids(corpus, nlist, iters)
+    c = corpus.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("cv"))
     # _assign carries cv through its aggregate, so the inverted file needs
     # no join back to the corpus — one broadcast join + one shuffle total
     assignments = cut_lineage(_assign(c, centroids))
@@ -589,8 +573,6 @@ def ivf_build_cached(
     corpus: DataFrame,
     nlist: int | None = None,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """``ivf_build`` memoized per (session, canonical corpus plan, params)
     in the shared relation cache (``functions/dfcache.py``) — the
@@ -603,13 +585,13 @@ def ivf_build_cached(
     degrades to a rebuild, never a failure)."""
     from ..functions.dfcache import memo, persist_df
 
-    nlist = _resolve_nlist(corpus, nlist, id_col, vec_col)
-    norm = corpus.select(id_col, vec_col)
+    nlist = _resolve_nlist(corpus, nlist)
+    norm = corpus.select("vec_id", "embedding")
 
     def build() -> tuple[DataFrame, DataFrame]:
         c = spread(corpus)
-        centroids = ivf_centroids(c, nlist, iters, id_col, vec_col)
-        vecs = c.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("cv"))
+        centroids = ivf_centroids(c, nlist, iters)
+        vecs = c.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("cv"))
         # centroids is a driver-built LocalRelation (nlist rows) — nothing
         # to persist; the inverted file is the shared expensive relation
         return centroids, persist_df(_assign(vecs, centroids))
@@ -617,7 +599,7 @@ def ivf_build_cached(
     try:
         key = ("ivf", corpus.sparkSession, norm.semanticHash(), nlist, iters)
     except Exception:  # semanticHash is best-effort; cache is an optimization
-        return ivf_build(corpus, nlist, iters, id_col, vec_col)
+        return ivf_build(corpus, nlist, iters)
     return memo(corpus.sparkSession, key, build)
 
 
@@ -625,8 +607,6 @@ def _probe_buckets(
     centroids: DataFrame,
     queries: DataFrame,
     nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     keep_rank: bool = False,
 ) -> DataFrame:
     """The bucket-selection half every IVF probe variant shares: rank the
@@ -636,7 +616,7 @@ def _probe_buckets(
     bucket rank ``pr`` so an nprobe sweep can derive every smaller
     probe's membership (pr ≤ n) from ONE selection at the max."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).withColumn("q_norm", l2_norm_expr("q_vec", EMBEDDING_DIM))
     probe_rank = Window.partitionBy("query_id").orderBy(
         F.col("qc_cos").desc(), F.col("centroid_id").asc()
@@ -664,13 +644,11 @@ def ivf_probe(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe a built IVF index: each query ranks only the vectors in its
     ``nprobe`` nearest centroids' buckets — an equi-join on centroid_id
     against the inverted file, scanning ~nprobe/nlist of the corpus."""
-    probes = _probe_buckets(centroids, queries, nprobe, id_col, vec_col)
+    probes = _probe_buckets(centroids, queries, nprobe)
 
     # corpus-side norm once per inverted-file row, before the probe join
     inv = assignments.withColumn("c_norm", l2_norm_expr("cv", EMBEDDING_DIM))
@@ -705,8 +683,6 @@ def ivf_topk(
     nlist: int | None = None,
     nprobe: int = IVF_NPROBE,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index: build + probe in
     one call. For repeated query sets build once with ``ivf_build`` and
@@ -714,16 +690,14 @@ def ivf_topk(
     dominates cost and amortizes to zero. The build is the session-shared
     one (``ivf_build_cached``), so other consumers of the same corpus
     (semantic dedup, retrieval) reuse it."""
-    centroids, assignments = ivf_build_cached(corpus, nlist, iters, id_col, vec_col)
-    return ivf_probe(centroids, assignments, queries, k, nprobe, id_col, vec_col)
+    centroids, assignments = ivf_build_cached(corpus, nlist, iters)
+    return ivf_probe(centroids, assignments, queries, k, nprobe)
 
 
 def ivf_add(
     centroids: DataFrame,
     assignments: DataFrame,
     new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Append a batch of new vectors to an existing inverted file WITHOUT
     retraining — the daily-ingest shape of ANN index maintenance (faiss
@@ -735,7 +709,7 @@ def ivf_add(
     probe recall sag — the centroids, not the file, go stale.
     """
     batch = new_vectors.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("cv")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("cv")
     )
     return assignments.unionByName(_assign(batch, centroids))
 
@@ -801,8 +775,6 @@ def semantic_dedup(
     threshold: float = SEMANTIC_THRESHOLD,
     nlist: int | None = None,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_iterations: int = 10,
     quantizer_corpus: DataFrame | None = None,
 ) -> DataFrame:
@@ -837,15 +809,11 @@ def semantic_dedup(
     # the subset privately against the same centroids. At 100 TB that is
     # "read the persisted index", never "retrain per pipeline stage".
     if quantizer_corpus is None:
-        _centroids, assigned = ivf_build_cached(
-            embeddings, nlist, iters, id_col, vec_col
-        )
+        _centroids, assigned = ivf_build_cached(embeddings, nlist, iters)
     else:
-        _centroids, assigned_full = ivf_build_cached(
-            quantizer_corpus, nlist, iters, id_col, vec_col
-        )
+        _centroids, assigned_full = ivf_build_cached(quantizer_corpus, nlist, iters)
         assigned = assigned_full.join(
-            embeddings.select(F.col(id_col).alias("vid")), "vid", "left_semi"
+            embeddings.select(F.col("vec_id").alias("vid")), "vid", "left_semi"
         )
     # In-bucket pairing as ONE Arrow pass grouped by centroid: each bucket
     # arrives as a pandas frame (bucket size ≈ corpus/nlist by
@@ -873,7 +841,7 @@ def semantic_dedup(
         "doc_id", "vec_id"
     )
     return (
-        embeddings.select(F.col(id_col).alias("vec_id"))
+        embeddings.select("vec_id")
         .join(labels, "vec_id", "left")
         .select(
             "vec_id",
@@ -885,8 +853,6 @@ def semantic_dedup(
 
 def embedding_quantize(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization of the embedding column —
     the storage-scale path for billion-vector ANN corpora (4× smaller
@@ -905,13 +871,13 @@ def embedding_quantize(
     """
     d = "double"
     absmax = F.array_max(
-        F.transform(F.col(vec_col), lambda x: F.abs(x.cast(d)))
+        F.transform(F.col("embedding"), lambda x: F.abs(x.cast(d)))
     )
     df = embeddings.select(
-        F.col(id_col), F.col(vec_col), (absmax / F.lit(127.0)).alias("__sc")
+        F.col("vec_id"), F.col("embedding"), (absmax / F.lit(127.0)).alias("__sc")
     )
     qvec = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.when(
             # round-ok: quantizer-grid rounding at scale 0 — a half-integer x/sc is
             # the quantizer's own bucket boundary; both engines evaluate the
@@ -921,18 +887,18 @@ def embedding_quantize(
         .otherwise(F.lit(0.0))
         .cast("int"),
     )
-    qdf = df.select(id_col, vec_col, "__sc", qvec.alias("qvec"))
+    qdf = df.select("vec_id", "embedding", "__sc", qvec.alias("qvec"))
     err = F.zip_with(
-        F.col(vec_col),
+        F.col("embedding"),
         F.col("qvec"),
         lambda x, qv: (x.cast(d) - qv.cast(d) * F.col("__sc"))
         * (x.cast(d) - qv.cast(d) * F.col("__sc")),
     )
     mse = F.aggregate(err, F.lit(0.0), lambda a, v: a + v) / F.size(
-        F.col(vec_col)
+        F.col("embedding")
     )
     return qdf.select(
-        id_col,
+        "vec_id",
         F.col("__sc").alias("scale"),
         "qvec",
         mse.alias("mse"),
@@ -1002,8 +968,6 @@ def pq_train(
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_cap: int = IVF_TRAIN_CAP,
 ) -> DataFrame:
     """Train product-quantization codebooks on the same deterministic
@@ -1015,9 +979,9 @@ def pq_train(
     faiss ``ProductQuantizer`` object."""
     rows = (
         embeddings.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("v"),
-            hex_hash64(F.col(id_col).cast("string")).alias("h"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").alias("v"),
+            hex_hash64(F.col("vec_id").cast("string")).alias("h"),
         )
         .orderBy("h", "vid")
         .limit(train_cap)
@@ -1042,15 +1006,13 @@ def pq_train(
 def pq_encode(
     embeddings: DataFrame,
     codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode every vector to its ``m`` nearest sub-codeword ids — one
     Arrow ``mapInPandas`` pass with the (tiny) codebooks in the task
     closure: no join, no shuffle, the encode streams off the scan at any
     corpus size (the ``_assign`` pattern). Nearest is sequential-fold
     squared L2 with ties to the lowest code id — bit-identical to the
-    oracle's expression replay. Output: (id_col, codes array<int>)."""
+    oracle's expression replay. Output: (vec_id, codes array<int>)."""
     books = _collect_codebooks(codebooks)
     dsub = books[0][1].shape[1]
 
@@ -1058,14 +1020,14 @@ def pq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             parts = [
                 ids[_seq_sqdist(V[:, s * dsub : (s + 1) * dsub], C).argmin(axis=1)]
                 for s, (ids, C) in enumerate(books)
             ]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "vec_id": pdf["vec_id"],
                     "codes": [
                         [int(parts[s][r]) for s in range(len(books))]
                         for r in range(len(V))
@@ -1073,8 +1035,8 @@ def pq_encode(
                 }
             )
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        encode_batches, f"{id_col} long, codes array<int>"
+    return embeddings.select("vec_id", "embedding").mapInPandas(
+        encode_batches, "vec_id long, codes array<int>"
     )
 
 
@@ -1131,12 +1093,11 @@ def _collect_codebooks_once(codebooks: DataFrame) -> list[tuple["np.ndarray", "n
 def pq_reconstruct(
     codes: DataFrame,
     codebooks: DataFrame,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Decode PQ codes back to approximate vectors (codeword
     concatenation) — the probe-side dequantization. Same closure-shipped
     Arrow pass as the encode; no join against the code table's size.
-    Output: (id_col, rv array<double>)."""
+    Output: (vec_id, rv array<double>)."""
     books = _collect_codebooks(codebooks)
     lut = [
         {int(i): C[j] for j, i in enumerate(ids)} for ids, C in books
@@ -1148,7 +1109,7 @@ def pq_reconstruct(
                 continue
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "vec_id": pdf["vec_id"],
                     "rv": [
                         [float(x) for s, c in enumerate(cs) for x in lut[s][c]]
                         for cs in pdf["codes"]
@@ -1156,8 +1117,8 @@ def pq_reconstruct(
                 }
             )
 
-    return codes.select(id_col, "codes").mapInPandas(
-        decode_batches, f"{id_col} long, rv array<double>"
+    return codes.select("vec_id", "codes").mapInPandas(
+        decode_batches, "vec_id long, rv array<double>"
     )
 
 
@@ -1260,8 +1221,6 @@ def pq_train_residual(
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_cap: int = IVF_TRAIN_CAP,
 ) -> DataFrame:
     """Train PQ codebooks on RESIDUALS (vector − its nearest coarse
@@ -1273,9 +1232,9 @@ def pq_train_residual(
     lowest centroid id, so the oracle re-derives identical residuals."""
     rows = (
         embeddings.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("v"),
-            hex_hash64(F.col(id_col).cast("string")).alias("h"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").alias("v"),
+            hex_hash64(F.col("vec_id").cast("string")).alias("h"),
         )
         .orderBy("h", "vid")
         .limit(train_cap)
@@ -1481,8 +1440,6 @@ def pq_codes_cached(
     embeddings: DataFrame,
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """(codebooks, codes) memoized per (session, canonical corpus plan,
     geometry) in the shared relation cache — the PQ twin of
@@ -1493,14 +1450,14 @@ def pq_codes_cached(
     from ..functions.dfcache import memo, persist_df
 
     def build() -> tuple[DataFrame, DataFrame]:
-        books = pq_train(embeddings, m, ksub, id_col=id_col, vec_col=vec_col)
-        return books, persist_df(pq_encode(embeddings, books, id_col, vec_col))
+        books = pq_train(embeddings, m, ksub)
+        return books, persist_df(pq_encode(embeddings, books))
 
     try:
         key = (
             "pq",
             embeddings.sparkSession,
-            embeddings.select(id_col, vec_col).semanticHash(),
+            embeddings.select("vec_id", "embedding").semanticHash(),
             m,
             ksub,
         )
@@ -1554,8 +1511,6 @@ def pq_adc_probe(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe the PQ-coded inverted file by ASYMMETRIC distance
     computation — the actual faiss IVFPQ scan: per query, precompute a
@@ -1597,12 +1552,12 @@ def pq_adc_probe(
         posmap[s, ids] = np.arange(len(ids))
         norm_lut[s, : len(ids)] = _seq_sq_sums(C)
 
-    probes = _probe_buckets(centroids, queries, nprobe, id_col, vec_col)
+    probes = _probe_buckets(centroids, queries, nprobe)
     cand = (
         F.broadcast(probes.select("query_id", "q_vec", "centroid_id"))
         .join(
             assignments.select("vid", "centroid_id").join(
-                codes.select(F.col(id_col).alias("vid"), "codes"), "vid"
+                codes.select(F.col("vec_id").alias("vid"), "codes"), "vid"
             ),
             "centroid_id",
         )
@@ -1664,8 +1619,6 @@ def pq_residual_adc_probe(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC probe over RESIDUAL codes — the probe a production faiss
     IVFPQ actually runs: candidates are ranked from their m-byte
@@ -1692,7 +1645,7 @@ def pq_residual_adc_probe(
     codes); bucket selection and the candidate equi-join are unchanged
     from ``pq_adc_probe``.
     """
-    probes = _probe_buckets(centroids, queries, nprobe, id_col, vec_col)
+    probes = _probe_buckets(centroids, queries, nprobe)
     scored = _residual_adc_scored(probes, centroids, codes, codebooks)
     rank = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -1959,8 +1912,6 @@ def ivf_pq_refine_probe(
     k: int = 5,
     refine: int = 4,
     nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The deployable two-stage IVFPQ probe as a first-class serving API
     (the faiss ``IVFPQR`` search path): a ``k·refine`` residual-ADC
@@ -1980,11 +1931,11 @@ def ivf_pq_refine_probe(
         centroids, assignments, codes, codebooks, queries, k * refine, nprobe
     )
     qn = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).withColumn("q_norm", l2_norm_expr("q_vec", EMBEDDING_DIM))
     nv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("n_vec"),
     ).withColumn("n_norm", l2_norm_expr("n_vec", EMBEDDING_DIM))
     rank = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -2113,7 +2064,7 @@ def ann_recall_sweep(
     # a repeated value would alias two aggregates alike
     nprobes = sorted(set(nprobes))
     np_max = nprobes[-1]
-    nlist = _resolve_nlist(embeddings, nlist, "vec_id", "embedding")
+    nlist = _resolve_nlist(embeddings, nlist)
     centroids, assignments = ivf_build_cached(embeddings, nlist)
     queries = embeddings.filter(F.col("vec_id") % query_mod == 0)
     books, codes = pq_residual_codes_cached(
@@ -2121,9 +2072,7 @@ def ann_recall_sweep(
     )
     # probe buckets ONCE at max nprobe with the bucket rank carried so
     # each sweep point can replay its own membership (pr <= nprobe)
-    probes = _probe_buckets(
-        centroids, queries, np_max, "vec_id", "embedding", keep_rank=True
-    )
+    probes = _probe_buckets(centroids, queries, np_max, keep_rank=True)
     # ONE candidate table, both scores: inverted file ⋈ codes is 1:1 on
     # vid, so the fused join enumerates the identical candidate set the
     # two former persisted tables each enumerated separately

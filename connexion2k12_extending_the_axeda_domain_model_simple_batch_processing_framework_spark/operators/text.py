@@ -389,7 +389,6 @@ def bpe_train(
     documents: DataFrame,
     n_merges: int = BPE_MERGES,
     word_cap: int = BPE_WORD_CAP,
-    text_col: str = "text",
 ) -> DataFrame:
     """Train BPE merges on a corpus: ONE distributed word-count
     (map-side-combined groupBy — the only pass that sees the corpus),
@@ -401,7 +400,7 @@ def bpe_train(
     independent of corpus size."""
     wc = (
         spread(documents)
-        .select(F.explode(tokens(F.col(text_col))).alias("w"))
+        .select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.col("c").desc(), F.col("w"))

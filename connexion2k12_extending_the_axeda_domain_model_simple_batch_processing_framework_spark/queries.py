@@ -21,7 +21,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .domain import STATE_IN_PROCESS, STATE_NOT_STARTED, STATE_SUCCESS
+from .domain import (
+    STATE_COMPLETE_WITH_ERROR,
+    STATE_IN_PROCESS,
+    STATE_NOT_STARTED,
+    STATE_SUCCESS,
+)
 from .functions.rounding import iround_ratio
 from .operators import analytics, dedup, lifecycle, process, similarity, text
 from .operators.analyze import validate_tasks
@@ -279,7 +284,7 @@ def q_finalizer_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "batch_id",
         F.when(F.col("error_count") == 0, F.lit(STATE_SUCCESS))
-        .otherwise(F.lit("COMPLETE_WITH_ERROR"))
+        .otherwise(F.lit(STATE_COMPLETE_WITH_ERROR))
         .alias("final_state"),
         "completion_time",
         "error_count",
@@ -2391,7 +2396,7 @@ def q_ann_pq_refine_ksub_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     `scan_frac` (nprobe/nlist — the fraction of buckets the code scan
     touches; the exact pass touches only k·refine rows per query)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    nl = similarity._resolve_nlist(emb, None, "vec_id", "embedding")
+    nl = similarity._resolve_nlist(emb, None)
     np_ = similarity.IVF_NPROBE
     return similarity.ivf_pq_refine_recall(
         emb, ksub=PQ_KSUB_WIDE

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..domain import TABLES
+from ..functions.dfcache import session_alive
 
 # Runtime-settable SQL confs the engine's plans depend on, declared once.
 # ``get_spark`` sets these at build time, but callers may hand us a foreign
@@ -67,13 +68,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
 _TABLE_CACHE: dict = {}
 
 
-def _session_alive(spark: SparkSession) -> bool:
-    try:
-        return spark.sparkContext._jsc is not None
-    except Exception:
-        return False
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -84,7 +78,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = _TABLE_CACHE.get(key)
     if hit is not None:
         return hit
-    for k in [k for k in _TABLE_CACHE if not _session_alive(k[0])]:
+    for k in [k for k in _TABLE_CACHE if not session_alive(k[0])]:
         del _TABLE_CACHE[k]
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
@@ -107,9 +101,8 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 64,
-    sort_col: str | None = None,
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) managed table.
+    """Persist ``df`` as a managed table bucketed and sorted on ``bucket_col``.
 
     Bucketing is the join strategy money buys at 100 TB: two tables
     bucketed on the same key with the same bucket count equi-join with NO
@@ -117,13 +110,12 @@ def write_bucketed(
     sorted bucket upgrades it to a zero-sort merge join. Use for the
     repeatedly-joined spines: task results by batch_id, shingle/band
     tables by doc_id, the IVF inverted file by centroid_id.
-    ``sort_col`` defaults to the bucket column.
     """
     writer = (
         df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, bucket_col)
-        .sortBy(sort_col or bucket_col)
+        .sortBy(bucket_col)
     )
     writer.saveAsTable(table)
 

@@ -45,7 +45,7 @@ def read_task_file(spark: SparkSession, path: str, batch_id: int = 1) -> DataFra
     return parse_task_lines(numbered, batch_id=batch_id)
 
 
-def parse_task_lines(df: DataFrame, batch_id: int = 1, line_col: str = "raw_line") -> DataFrame:
+def parse_task_lines(df: DataFrame, batch_id: int = 1) -> DataFrame:
     """Split raw task lines into typed fields.
 
     Only the first three comma-separated fields are addressed (``F.get``
@@ -53,11 +53,11 @@ def parse_task_lines(df: DataFrame, batch_id: int = 1, line_col: str = "raw_line
     property/group segments remain visible in ``raw_line``. Matches
     ProcessBatch.groovy's ``task.split(/,/)`` destructuring.
     """
-    parts = F.split(F.col(line_col), ",")
+    parts = F.split(F.col("raw_line"), ",")
     return df.select(
         F.lit(batch_id).cast("long").alias("batch_id"),
         F.col("task_number").cast("long").alias("task_number"),
-        F.col(line_col).alias("raw_line"),
+        F.col("raw_line"),
         F.get(parts, 0).alias("model_name"),
         F.get(parts, 1).alias("serial_number"),
         F.get(parts, 2).alias("asset_name"),

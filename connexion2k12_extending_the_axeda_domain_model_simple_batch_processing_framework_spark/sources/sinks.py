@@ -102,7 +102,6 @@ EXPORT_SHARDS = 16
 def export_jsonl(
     df: DataFrame,
     path: str,
-    shard_col: str = "doc_id",
     n_shards: int = EXPORT_SHARDS,
     mode: str = "overwrite",
 ) -> None:
@@ -110,9 +109,9 @@ def export_jsonl(
     most training loaders consume (one JSON object per line, directory
     per shard).
 
-    Shard assignment is the deterministic md5 of ``shard_col``
+    Shard assignment is the deterministic md5 of ``doc_id``
     (``sampling.hash_bucket`` — one placement rule engine-wide), and rows
-    sort by ``shard_col`` within each shard, so a retried job writes
+    sort by ``doc_id`` within each shard, so a retried job writes
     byte-identical shards (membership AND order; shuffle-fetch order
     alone is run-dependent). One shuffle on the shard key; each output
     directory is one shard: ``{path}/export_shard=NN/part-*.txt`` (a
@@ -128,9 +127,9 @@ def export_jsonl(
     line = F.to_json(
         F.struct(*df.columns), {"ignoreNullFields": "false"}
     ).alias("line")
-    shard = hash_bucket(F.col(shard_col), n_shards).cast("int").alias("export_shard")
+    shard = hash_bucket(F.col("doc_id"), n_shards).cast("int").alias("export_shard")
     (
-        df.select(shard, F.col(shard_col).alias("__order"), line)
+        df.select(shard, F.col("doc_id").alias("__order"), line)
         .repartition(n_shards, "export_shard")
         .sortWithinPartitions("export_shard", "__order")
         .drop("__order")
@@ -175,7 +174,7 @@ def export_sorted(
     out.write.mode(mode).partitionBy("export_shard").parquet(path)
 
 
-def sorted_export_manifest(spark, path: str, order_col: str = "doc_id") -> DataFrame:
+def sorted_export_manifest(spark, path: str) -> DataFrame:
     """Per-shard manifest of a ``export_sorted`` directory: (export_shard,
     n_rows, min_order, max_order) — what a training loader uses to seek
     into the total order without opening every shard."""
@@ -184,8 +183,8 @@ def sorted_export_manifest(spark, path: str, order_col: str = "doc_id") -> DataF
         df.groupBy("export_shard")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.min(order_col).alias("min_order"),
-            F.max(order_col).alias("max_order"),
+            F.min("doc_id").alias("min_order"),
+            F.max("doc_id").alias("max_order"),
         )
         .orderBy("export_shard")
     )

@@ -130,8 +130,6 @@ def ivf_append_batch(
     batch_df: DataFrame,
     batch_id: int,
     index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> bool:
     """One idempotent append step (the foreachBatch body, callable
     directly for replay tests): assign the batch against the frozen
@@ -154,7 +152,7 @@ def ivf_append_batch(
     spark = batch_df.sparkSession
     centroids = spark.read.parquet(f"{index_path}/centroids")
     batch = batch_df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("cv")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("cv")
     )
     similarity._assign(batch, centroids).write.mode("overwrite").partitionBy(
         "centroid_id"
@@ -245,8 +243,6 @@ def ivf_stream_writer(
     vectors: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     compact_every: int | None = None,
 ):
     """A configured ``writeStream`` (foreachBatch) that keeps the persisted
@@ -262,7 +258,7 @@ def ivf_stream_writer(
     """
 
     def _append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ivf_append_batch(batch_df, batch_id, index_path, id_col, vec_col)
+        ivf_append_batch(batch_df, batch_id, index_path)
         if compact_every:
             meta = _read_meta(index_path)
             if meta["high_water"] - meta["compacted_through"] >= compact_every:
@@ -281,8 +277,6 @@ def ivf_probe_batch(
     out_path: str,
     k: int = 5,
     nprobe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> bool:
     """One idempotent serving step (the foreachBatch body of
     ``ivf_probe_stream_writer``, callable directly for replay tests):
@@ -320,9 +314,7 @@ def ivf_probe_batch(
     spark = batch_df.sparkSession
     centroids = spark.read.parquet(f"{index_path}/centroids")
     inv = read_ivf_assignments(spark, index_path)
-    res = similarity.ivf_probe(
-        centroids, inv, batch_df, k, nprobe, id_col, vec_col
-    )
+    res = similarity.ivf_probe(centroids, inv, batch_df, k, nprobe)
     res.write.mode("overwrite").parquet(f"{out_path}/v={batch_id}")
     # meta AFTER the result dir (the module's write→meta ordering): a
     # crash between the two leaves high_water conservative, the replay
@@ -400,8 +392,6 @@ def ivf_probe_stream_writer(
     checkpoint_dir: str,
     k: int = 5,
     nprobe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """A configured ``writeStream`` (foreachBatch) that serves ANN top-k
     for a STREAM of query vectors against the maintained index — the
@@ -418,9 +408,7 @@ def ivf_probe_stream_writer(
     """
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
-        ivf_probe_batch(
-            batch_df, batch_id, index_path, out_path, k, nprobe, id_col, vec_col
-        )
+        ivf_probe_batch(batch_df, batch_id, index_path, out_path, k, nprobe)
 
     return (
         queries.writeStream.foreachBatch(_probe)
@@ -492,8 +480,6 @@ def ivf_pq_append_batch(
     batch_id: int,
     index_path: str,
     pq_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> bool:
     """One idempotent append step for the FULL IVFPQ artifact pair: the
     float half first (``ivf_append_batch`` — its own delta dir and epoch
@@ -508,7 +494,7 @@ def ivf_pq_append_batch(
     (the shortlist comes from codes alone) until the replay completes:
     the compressed path serves a consistent, slightly older view, never
     a wrong one."""
-    ivf_append_batch(batch_df, batch_id, index_path, id_col, vec_col)
+    ivf_append_batch(batch_df, batch_id, index_path)
     if not batch_df.head(1):
         return False
     meta = _read_pq_meta(pq_path)
@@ -524,7 +510,7 @@ def ivf_pq_append_batch(
     centroids = spark.read.parquet(f"{index_path}/centroids")
     codebooks = spark.read.parquet(f"{pq_path}/codebooks")
     batch = batch_df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("cv")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("cv")
     )
     # the same _assign arithmetic ivf_append_batch just ran — recomputed
     # from the batch rather than read back from the float delta so the
@@ -638,8 +624,6 @@ def ivf_pq_stream_writer(
     pq_path: str,
     checkpoint_dir: str,
     compact_every: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """A configured ``writeStream`` (foreachBatch) that keeps BOTH halves
     of a deployed IVFPQ index fresh under a vector ingest stream — the
@@ -648,9 +632,7 @@ def ivf_pq_stream_writer(
     calls ``.start()``."""
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
-        ivf_pq_append_batch(
-            batch_df, batch_id, index_path, pq_path, id_col, vec_col
-        )
+        ivf_pq_append_batch(batch_df, batch_id, index_path, pq_path)
         if compact_every:
             meta = _read_meta(index_path)
             if meta["high_water"] - meta["compacted_through"] >= compact_every:

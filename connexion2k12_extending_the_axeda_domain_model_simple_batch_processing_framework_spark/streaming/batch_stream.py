@@ -181,8 +181,6 @@ def session_window_stream(
 
 def exact_dedup_stream(
     docs: DataFrame,
-    text_col: str = "text",
-    time_col: str = "event_time",
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Streaming exact dedup: first occurrence of each content hash within
@@ -192,7 +190,7 @@ def exact_dedup_stream(
     (reference parity: ProcessBatch.groovy's duplicate-serial rejection is
     the same first-wins contract, applied as data arrives)."""
     return (
-        docs.withColumn("content_hash", F.md5(F.col(text_col)))
-        .withWatermark(time_col, watermark)
+        docs.withColumn("content_hash", F.md5(F.col("text")))
+        .withWatermark("event_time", watermark)
         .dropDuplicatesWithinWatermark(["content_hash"])
     )

@@ -91,13 +91,8 @@ def scd2_stream_writer(
     updates: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    key_col: str = "user_id",
-    ts_col: str = "valid_from",
-    tie_col: str = "event_id",
     n_buckets: int = SCD2_BUCKETS,
     compact_every: int | None = None,
-    op_col: str | None = None,
-    delete_value: str = "D",
 ):
     """A configured ``writeStream`` (foreachBatch) keeping the SCD2 table
     at ``table_path`` current under a CDC update stream; the caller picks
@@ -117,10 +112,7 @@ def scd2_stream_writer(
     """
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        scd2_apply_batch(
-            batch_df, batch_id, table_path, key_col, ts_col, tie_col,
-            n_buckets, op_col, delete_value,
-        )
+        scd2_apply_batch(batch_df, batch_id, table_path, n_buckets)
         if compact_every:
             scd2_maybe_compact(batch_df.sparkSession, table_path, compact_every)
 
@@ -134,9 +126,6 @@ def scd2_apply_batch(
     batch_df: DataFrame,
     batch_id: int,
     table_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "valid_from",
-    tie_col: str = "event_id",
     n_buckets: int = SCD2_BUCKETS,
     op_col: str | None = None,
     delete_value: str = "D",
@@ -168,7 +157,7 @@ def scd2_apply_batch(
         )
     spark = batch_df.sparkSession
     raw_cols = batch_df.columns
-    batch = batch_df.withColumn("kb", _bucket_col(key_col, n_buckets))
+    batch = batch_df.withColumn("kb", _bucket_col("user_id", n_buckets))
     touched = [int(r.kb) for r in batch.select("kb").distinct().collect()]
     # resolve the PRE-batch snapshot (versions < batch_id): a replayed
     # batch must not read its own previous output back as prior state, or
@@ -180,15 +169,15 @@ def scd2_apply_batch(
         # an SCD2 table IS its update log: project the raw update
         # columns back out and re-version together with the batch
         prior = current.select(*raw_cols).withColumn(
-            "kb", _bucket_col(key_col, n_buckets)
+            "kb", _bucket_col("user_id", n_buckets)
         )
         log = prior.unionByName(batch)
     else:
         log = batch
     # defensive against an at-least-once SOURCE replaying rows across
     # different batch ids: one (key, ts, tie) update is one version
-    log = log.dropDuplicates([key_col, ts_col, tie_col])
-    rebuilt = scd2_build(log, key_col, ts_col, tie_col, op_col, delete_value)
+    log = log.dropDuplicates(["user_id", "valid_from", "event_id"])
+    rebuilt = scd2_build(log, op_col=op_col, delete_value=delete_value)
     if op_col is not None:
         # tombstones must SURVIVE in the stored table: the apply protocol
         # reads rows back AS the update log, and without the stored
@@ -202,7 +191,6 @@ def scd2_apply_batch(
         tombs = (
             log.filter(F.col(op_col) == F.lit(delete_value))
             .withColumn("dim_version", F.lit(None).cast("long"))
-            .withColumn("valid_from", F.col(ts_col))
             .withColumn("valid_to", F.lit(None).cast(ts_type))
             .withColumn("is_current", F.lit(False))
         )

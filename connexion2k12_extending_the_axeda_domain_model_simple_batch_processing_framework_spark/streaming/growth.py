@@ -111,8 +111,6 @@ def growth_apply_batch(
     batch_id: int,
     table_path: str,
     period: str = "day",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
 ) -> bool:
     """One idempotent apply step (the foreachBatch body, callable directly
     for replay tests). Classifies the batch's newly-seen (period, user)
@@ -133,10 +131,10 @@ def growth_apply_batch(
         return False
     spark = batch_df.sparkSession
 
-    p_col = F.date_trunc(period, F.col(ts_col)).cast("date")
+    p_col = F.date_trunc(period, F.col("ts")).cast("date")
     grid = (
         batch_df.select(
-            p_col.alias("period"), F.col(user_col).alias("user_id")
+            p_col.alias("period"), F.col("user_id")
         )
         .distinct()
         .withColumn("pidx", temporal.growth_period_idx(F.col("period"), period))
@@ -387,8 +385,6 @@ def growth_stream_writer(
     table_path: str,
     checkpoint_dir: str,
     period: str = "day",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     compact_every: int | None = None,
 ):
     """A configured ``writeStream`` (foreachBatch) that maintains the
@@ -397,9 +393,7 @@ def growth_stream_writer(
     tests/test_streaming_growth.py."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        growth_apply_batch(
-            batch_df, batch_id, table_path, period, user_col, ts_col
-        )
+        growth_apply_batch(batch_df, batch_id, table_path, period)
         if compact_every:
             meta = _read_meta(table_path)
             if meta["high_water"] - meta["compacted_through"] >= compact_every:

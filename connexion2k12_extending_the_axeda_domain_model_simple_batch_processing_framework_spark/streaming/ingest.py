@@ -31,7 +31,7 @@ from ..operators.text import EMAIL_RE, LANG_PROFILES, PHONE_RE
 INGEST_MINHASHES = 8
 
 
-def redact_and_score_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_and_score_stream(docs: DataFrame) -> DataFrame:
     """PII-redact and score each arriving document (stateless projections).
 
     Adds ``redacted_text``, ``quality`` (same formula as
@@ -39,7 +39,7 @@ def redact_and_score_stream(docs: DataFrame, text_col: str = "text") -> DataFram
     tests/test_streaming_ingest.py) and ``rep_ratio`` (as
     ``operators.corpus.repetition_score``) while keeping all input columns.
     """
-    txt = F.col(text_col)
+    txt = F.col("text")
     redacted = F.regexp_replace(
         F.regexp_replace(txt, EMAIL_RE, "<EMAIL>"), PHONE_RE, "<PHONE>"
     )
@@ -90,16 +90,16 @@ def redact_and_score_stream(docs: DataFrame, text_col: str = "text") -> DataFram
     ).drop("__toks")
 
 
-def minhash_ingest_signature(text_col: str = "text", k: int = INGEST_MINHASHES) -> F.Column:
+def minhash_ingest_signature(k: int = INGEST_MINHASHES) -> F.Column:
     """Per-row minhash signature string — NO shuffle (higher-order min over
     the in-row shingle array), so it is legal in any streaming stage.
     Documents too short to shingle fall back to their exact md5 so nulls
     never collide in the dedup key."""
-    sh = word_shingles(tokens(F.col(text_col)), 3)
+    sh = word_shingles(tokens(F.col("text")), 3)
     sig = F.concat_ws(
         "-", *[_row_min_hash(sh, i).cast("string") for i in range(k)]
     )
-    return F.when(F.size(sh) > 0, sig).otherwise(F.md5(F.col(text_col)))
+    return F.when(F.size(sh) > 0, sig).otherwise(F.md5(F.col("text")))
 
 
 def _row_min_hash(sh_col: F.Column, seed: int) -> F.Column:
@@ -117,8 +117,6 @@ def ingest_pipeline_stream(
     min_quality: float | None = None,
     max_rep_ratio: float | None = None,
     watermark: str = "1 hour",
-    text_col: str = "text",
-    time_col: str = "event_time",
 ) -> DataFrame:
     """Full ingest pipeline over a streaming documents frame:
 
@@ -136,14 +134,14 @@ def ingest_pipeline_stream(
 
     min_quality = PIPE_MIN_QUALITY if min_quality is None else min_quality
     max_rep_ratio = PIPE_MAX_REP if max_rep_ratio is None else max_rep_ratio
-    scored = redact_and_score_stream(docs, text_col)
+    scored = redact_and_score_stream(docs)
     gated = scored.filter(
         (F.col("quality") >= min_quality) & (F.col("rep_ratio") <= max_rep_ratio)
     )
     keyed = (
-        gated.withColumn("content_hash", F.md5(F.col(text_col)))
-        .withColumn("minhash_sig", minhash_ingest_signature(text_col))
-        .withWatermark(time_col, watermark)
+        gated.withColumn("content_hash", F.md5(F.col("text")))
+        .withColumn("minhash_sig", minhash_ingest_signature())
+        .withWatermark("event_time", watermark)
     )
     exact = keyed.dropDuplicatesWithinWatermark(["content_hash"])
     return exact.dropDuplicatesWithinWatermark(["minhash_sig"])
@@ -153,7 +151,6 @@ def stream_band_table(
     docs: DataFrame,
     bands: int = None,  # defaults resolved from operators.dedup
     rows: int = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-row banded-minhash rows (doc cols + band, band_hash) for a
     STREAMING frame: the minhash mins come from higher-order ``array_min``
@@ -165,7 +162,7 @@ def stream_band_table(
 
     bands = bands or LSH_BANDS
     rows = rows or LSH_ROWS
-    sh = word_shingles(tokens(F.col(text_col)), 3)
+    sh = word_shingles(tokens(F.col("text")), 3)
     d = docs.withColumn("__sh", sh).filter(F.size("__sh") > 0)
     k = bands * rows
     mins = [_row_min_hash(F.col("__sh"), i) for i in range(k)]
@@ -189,7 +186,6 @@ def corpus_collision_stream(
     stream_docs: DataFrame,
     corpus_band_index: DataFrame,
     watermark: str = "1 hour",
-    time_col: str = "event_time",
 ) -> DataFrame:
     """Flag arriving documents that near-dup something ALREADY in the
     stored corpus — the streaming twin of
@@ -208,6 +204,6 @@ def corpus_collision_stream(
     out_cols = [c for c in stream_docs.columns] + ["corpus_doc_id"]
     return (
         hits.select(*out_cols)
-        .withWatermark(time_col, watermark)
+        .withWatermark("event_time", watermark)
         .dropDuplicatesWithinWatermark(["doc_id", "corpus_doc_id"])
     )

@@ -66,13 +66,12 @@ def _admit_group_fn(cap: int):
 def domain_cap_stream(
     docs: DataFrame,
     cap: int = DOMAIN_STREAM_CAP,
-    url_col: str = "url",
 ) -> DataFrame:
     """Admission disposition per arriving document: (domain, doc_id,
     admit_seq, admitted). The registrable domain derives from the URL with
     the same JVM regex as the batch ``domain_cap`` (stateless, before the
     keyed state), so online and retrospective caps agree on the key."""
-    host = F.regexp_extract(F.col(url_col), "^[a-z]+://([^/]+)", 1)
+    host = F.regexp_extract(F.col("url"), "^[a-z]+://([^/]+)", 1)
     dom = F.regexp_extract(host, "([^.]+\\.[^.]+)$", 1)
     keyed = docs.select(F.col("doc_id"), dom.alias("domain"))
     return keyed.groupBy("domain").applyInPandasWithState(

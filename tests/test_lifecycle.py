@@ -3,6 +3,7 @@ GetBatchErrors / BatchIgniter / BatchFinalizer / DeleteBatch parity."""
 
 from __future__ import annotations
 
+import re
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 
@@ -122,8 +123,11 @@ def test_finalizer_state_machine(spark):
 def test_delete_batches_state_guard(spark):
     # ask to delete 1 (NOT_STARTED → goes) and 3 (IN_PROCESS → guarded)
     criteria = spark.createDataFrame([(1,), (3,)], "batch_id long")
-    survivors = {r.batch_id for r in lifecycle.delete_batches(_batches(spark), criteria).collect()}
-    assert survivors == {2, 3, 4, 5}
+    survivors = lifecycle.delete_batches(_batches(spark), criteria)
+    assert {r.batch_id for r in survivors.collect()} == {2, 3, 4, 5}
+    # the state guard rides the anti join's condition: one join, one anchor scan
+    plan = survivors._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bJoin\b", plan)) == 1, plan
 
 
 def test_mark_in_process_transitions_only_not_started(spark):
@@ -207,3 +211,26 @@ def test_list_batches_pages_match_python_slice_across_partitions(spark):
     # the 34 small jobs run 4 at a time to keep the test short
     with ThreadPoolExecutor(4) as pool:
         list(pool.map(check, cases))
+
+
+def test_list_batches_pages_past_the_int_range(spark):
+    # Spark's offset and limit are 32-bit: an offset at or past 2^31-1 is an
+    # empty page, and a huge page size is cut so offset + limit still fits
+    batches = spark.range(1, 50).select(
+        F.col("id").alias("batch_id"), F.lit(STATE_NOT_STARTED).alias("state")
+    )
+    for include_total in (False, True):
+        for page_number, page_size, want in (
+            (3, 10**9, []),
+            (10**6, 10**4, []),
+            (1, 10**9, list(range(1, 50))),
+        ):
+            page = lifecycle.list_batches(
+                batches,
+                page_number=page_number,
+                page_size=page_size,
+                include_total=include_total,
+            )
+            case = (page_number, page_size, include_total)
+            assert [r.batch_id for r in page.collect()] == want, case
+            assert page.columns[:2] == ["batch_id", "state"], case
