@@ -7,24 +7,15 @@ and in the DuckDB oracle — which is what makes the correctness gate's
 value-hash comparison possible (see SURVEY.md §6).
 """
 
-from .hashing import hex_hash64, md5_fingerprint, poly_hash
-from .rounding import (
-    iround_ratio,
-    iround_ratio_signed,
-    iround_ratio_signed_sql,
-    iround_ratio_sql,
-)
+from .hashing import hex_hash64
+from .rounding import iround_ratio, iround_ratio_signed
 from .textfns import punct_count, token_count_col, tokens, word_shingles
 from .vectors import cosine_similarity, dot, l2_norm
 
 __all__ = [
     "iround_ratio",
     "iround_ratio_signed",
-    "iround_ratio_signed_sql",
-    "iround_ratio_sql",
     "hex_hash64",
-    "md5_fingerprint",
-    "poly_hash",
     "tokens",
     "word_shingles",
     "token_count_col",

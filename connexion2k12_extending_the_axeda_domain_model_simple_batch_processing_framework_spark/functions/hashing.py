@@ -14,8 +14,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: modulus for polynomial string hashes — large prime < 2^31 so that
-#: ``acc * 31 + code`` stays far below 2^63 (no overflow divergence).
+#: modulus for polynomial hashes — large prime < 2^31 so that
+#: ``acc * 131 + hash % POLY_MOD`` stays far below 2^63 (no overflow
+#: divergence).
 POLY_MOD = 1_000_000_007
 
 
@@ -43,24 +44,3 @@ def hex_hash64_sql(expr_sql: str, seed: int | None = None) -> str:
     """
     inner = expr_sql if seed is None else f"concat({expr_sql}, '#', '{seed}')"
     return f"CAST(conv(substring(md5({inner}), 1, 15), 16, 10) AS BIGINT)"
-
-
-def md5_fingerprint(col: Column) -> Column:
-    """Full md5 hex digest — the exact-dedup content fingerprint."""
-    return F.md5(col)
-
-
-def poly_hash(str_col: Column, seed: int = 0) -> Column:
-    """Polynomial rolling hash over the characters of a string:
-    ``acc = (acc * 31 + ascii(char)) % POLY_MOD`` folded left to right.
-
-    DuckDB twin uses ``list_reduce`` over ``string_split(s, '')`` with the
-    same recurrence — both fold sequentially, so results are identical for
-    ASCII inputs (tokenizers upstream restrict to [a-z0-9 ]).
-    """
-    chars = F.split(str_col, "")
-    return F.aggregate(
-        chars,
-        F.lit(seed).cast("long"),
-        lambda acc, c: (acc * 31 + F.ascii(c)) % POLY_MOD,
-    )

@@ -16,8 +16,8 @@ quotient.
 
 ``iround_ratio`` builds the Spark Column (pure JVM expressions: the
 integral divide is (x - pmod(x, y)) / y, whose decimal division is exact
-because y divides x - pmod(x, y)); ``iround_ratio_sql`` emits the DuckDB
-twin so query modules keep both sides textually adjacent.
+because y divides x - pmod(x, y)). The DuckDB side writes the same
+identity with ``//`` over HUGEINT operands.
 
 Headroom: 2*a*10^k must stay inside 38 digits — a <= ~5*10^(31-k).
 Every converted call site documents its magnitude argument.
@@ -30,9 +30,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "iround_ratio",
-    "iround_ratio_sql",
     "iround_ratio_signed",
-    "iround_ratio_signed_sql",
 ]
 
 
@@ -49,18 +47,6 @@ def iround_ratio(num: Column, den: Column, k: int) -> Column:
     return (q.cast("double") / float(10**k)).alias(f"iround{k}")
 
 
-def iround_ratio_sql(num_sql: str, den_sql: str, k: int) -> str:
-    """DuckDB twin of :func:`iround_ratio` as a SQL fragment.
-
-    Operands are wrapped in HUGEINT casts; embed the returned expression
-    directly in an oracle query.
-    """
-    return (
-        f"((2 * ({num_sql})::HUGEINT * {10**k} + ({den_sql}))"
-        f" // (2 * ({den_sql})::HUGEINT))::DOUBLE / {float(10**k)!r}"
-    )
-
-
 def iround_ratio_signed(num: Column, den: Column, k: int) -> Column:
     """round(num/den, k) for a SIGNED exact-integer numerator (den still
     positive): HALF_AWAY_FROM_ZERO midpoints, matching both Spark's
@@ -68,11 +54,3 @@ def iround_ratio_signed(num: Column, den: Column, k: int) -> Column:
     sign(num) * iround_ratio(|num|, den, k)."""
     sgn = F.when(num < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
     return sgn * iround_ratio(F.abs(num), den, k)
-
-
-def iround_ratio_signed_sql(num_sql: str, den_sql: str, k: int) -> str:
-    """DuckDB twin of :func:`iround_ratio_signed`."""
-    mag = iround_ratio_sql(f"abs({num_sql})", den_sql, k)
-    return (
-        f"(CASE WHEN ({num_sql}) < 0 THEN -1.0 ELSE 1.0 END * {mag})"
-    )

@@ -152,8 +152,7 @@ def events_sliding_rollup(events: DataFrame) -> DataFrame:
     event lands in exactly window/slide = 2 windows. ``F.window`` expands
     the memberships as a generator BEFORE the shuffle — output volume is
     2× the input feeding one groupBy (map-side combined), not a
-    self-join of hour buckets. The streaming twin is the same expression
-    under ``readStream`` + a watermark.
+    self-join of hour buckets.
 
     Output: window_start, event_type, n_events, sum_value, n_users.
     """

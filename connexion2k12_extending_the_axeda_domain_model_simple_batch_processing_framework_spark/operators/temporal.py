@@ -5,7 +5,7 @@ single-shuffle window plans — the composition-of-DataFrame-ops path:
 
 - sessionize: one shuffle on user_id, then lag + running sum inside each
   partition. No joins, no explosion; 100 TB of events sessionizes in one
-  pass (the streaming twin is ``session_window`` in Structured Streaming).
+  pass.
 - asof_attribute: the union/last-observation-carried-forward construction.
   Tag both event roles, sort within user by time, carry the last "left"
   (e.g. click) forward onto each "right" (e.g. purchase). One shuffle total

@@ -15,7 +15,17 @@ from pyspark.sql import SparkSession
 
 from .sources.catalog import _REQUIRED_CONFS
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the number of CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else a quarter of physical memory in whole
+    GiB, clamped to 1-8g (the Python workers and the OS need the rest)."""
+    quarter_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 // 2**30
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(max(quarter_gib, 1), 8)}g"
 
 
 def get_spark(app_name: str = "connexion-batch-engine", cpus: str | None = None) -> SparkSession:
@@ -32,7 +42,7 @@ def get_spark(app_name: str = "connexion-batch-engine", cpus: str | None = None)
       tables so plans stay broadcast even when stats are missing.
     - Arrow execution for Pandas UDFs (multimodal codec path).
     """
-    cpus = cpus or DEFAULT_CPUS
+    cpus = cpus or _default_cpus()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -67,7 +77,7 @@ def get_spark(app_name: str = "connexion-batch-engine", cpus: str | None = None)
         # nanosAsLong, UTC session time zone, InferFiltersFromGenerate
         # exclusion — declared and explained in sources/catalog.py
         .config(map=_REQUIRED_CONFS)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

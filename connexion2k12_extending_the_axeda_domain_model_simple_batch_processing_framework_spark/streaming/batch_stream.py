@@ -12,9 +12,7 @@ emits exactly one finalization row the moment its counts reach its size.
 
 Scale story: state is hash-partitioned on batch_id, so a million concurrent
 batches spread across the cluster; each micro-batch touches only the state
-of batches present in it. The windowed rollup is the standard
-watermark + tumbling-window partial aggregation — late events beyond the
-watermark are dropped, state is bounded.
+of batches present in it.
 """
 
 from __future__ import annotations
@@ -24,7 +22,6 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -120,77 +117,4 @@ def batch_lifecycle_stream(task_events: DataFrame) -> DataFrame:
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def task_outcome_rollup_stream(task_events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked tumbling-hour rollup of task outcomes per batch.
-
-    The streaming twin of the batch-status aggregation (GetBatch.groovy's
-    completed/success/error counts), windowed so state stays bounded: events
-    later than the watermark are dropped, closed windows are evicted.
-    """
-    return (
-        task_events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", "1 hour").alias("w"), "batch_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("n_success"),
-            F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("n_error"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "batch_id",
-            "n_events",
-            "n_success",
-            "n_error",
-        )
-    )
-
-
-def read_task_event_stream(spark, path: str, max_files_per_trigger: int = 10) -> DataFrame:
-    """File-source stream of task-outcome events (JSON lines); the test and
-    local-replay entry point. On a production cluster the same operator runs
-    unchanged over a Kafka source."""
-    return (
-        spark.readStream.schema(TASK_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .json(path)
-    )
-
-
-def session_window_stream(
-    task_events: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Streaming gap-based sessionization — the streaming twin of
-    ``operators.temporal.sessionize`` using Spark's native session_window:
-    a session closes when no event arrives for ``gap``; state is evicted
-    once the watermark passes the session end."""
-    return (
-        task_events.withWatermark("event_time", watermark)
-        .groupBy(F.session_window("event_time", gap).alias("w"), "batch_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "batch_id",
-            "n_events",
-        )
-    )
-
-
-def exact_dedup_stream(
-    docs: DataFrame,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: first occurrence of each content hash within
-    the watermark horizon passes; later copies are dropped. State holds one
-    md5 per distinct doc and is evicted as the watermark advances — the
-    streaming twin of operators.dedup.exact_dedup, for dedup-at-ingest
-    (reference parity: ProcessBatch.groovy's duplicate-serial rejection is
-    the same first-wins contract, applied as data arrives)."""
-    return (
-        docs.withColumn("content_hash", F.md5(F.col("text")))
-        .withWatermark("event_time", watermark)
-        .dropDuplicatesWithinWatermark(["content_hash"])
     )

@@ -16,8 +16,7 @@ into a ``foreachBatch`` sink:
   unioned with the batch, and re-versioned with the same ``scd2_build``;
 - every rewrite lands under a ``v=<batch_id>`` snapshot directory with
   ``mode=overwrite``, so an at-least-once replay of a micro-batch
-  overwrites its own output — **exactly-once by idempotence** (contrast
-  ``streaming/ann_index.py``'s documented at-least-once append);
+  overwrites its own output — **exactly-once by idempotence**;
 - readers resolve each bucket to its LATEST version (``read_scd2``) —
   the manifest-resolution step a table format (Delta/Iceberg) performs
   transactionally; the directory protocol here is its minimal stand-in;

@@ -3,8 +3,7 @@
 
 The batch operator sweeps the +1/−1 session-boundary line with a
 range-partitioned prefix sum over ALL sessions at once; a stream sees
-sessions as they CLOSE. This twin consumes a **closed-session feed** (the
-output of ``streaming.sessions.sessions_stream``, or any
+sessions as they CLOSE. This twin consumes a **closed-session feed** (any
 (user_id, session_idx, session_start, session_end) relation delivered
 through the usual inter-stage log — chaining two arbitrary stateful
 operators inside one streaming query is not a supported Spark plan, and

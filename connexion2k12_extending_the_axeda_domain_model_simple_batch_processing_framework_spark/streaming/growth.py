@@ -309,7 +309,7 @@ def growth_compact(spark, table_path: str) -> None:
     """Fold the current increment resolution into one cumulative
     ``inc_base/v=<C>`` generation and prune folded dirs — read-side
     listing back to O(1 + batches-since-compact). Crash-ordering as in
-    ``ann_index.ivf_stream_compact``: (1) write the new base (old dirs
+    ``cdc.scd2_compact``: (1) write the new base (old dirs
     still serve reads while it lands; readers derive the fold floor from
     the base VERSION, so even a committed base with stale meta never
     double-counts, and a torn base has no ``_SUCCESS`` and stays

@@ -1,4 +1,5 @@
-"""API-surface sweep: no column-name option that no caller sets.
+"""API-surface sweeps: no column-name option that no caller sets, and no
+public function that nothing calls.
 
 The engine's tables are fixed in one place (``domain.BATCH_ANCHOR_SCHEMA``,
 ``TASK_RESULT_SCHEMA``, the testdata tables), so operators read the column
@@ -15,6 +16,13 @@ set them all. An argument that only forwards an enclosing function's own
 column option (directly or from a closure inside it) counts as set only
 if that enclosing option is set somewhere, so a chain of pass-throughs
 that nobody starts stays unset.
+
+The function sweep reads the same files. A top-level package function or
+class is live when its name is referenced (an ``ast.Name`` or the
+attribute of an ``ast.Attribute``) in a package module's top-level code,
+anywhere in a test, tool or benchmark file, or in the body of another live
+definition. Imports and ``__all__`` strings are not references. Liveness
+is matched by name and iterated to a fixpoint.
 """
 
 from __future__ import annotations
@@ -151,4 +159,62 @@ def test_every_column_option_has_a_caller_that_sets_it():
     assert not unset, (
         "column-name options that no call site sets — read the schema's "
         "column name instead:\n" + "\n".join(unset)
+    )
+
+
+def _referenced_names(node: ast.AST) -> set[str]:
+    names = set()
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name):
+            names.add(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            names.add(sub.attr)
+    return names
+
+
+def uncalled_public_definitions() -> list[str]:
+    """Public top-level package functions and classes that nothing live
+    references."""
+    live: set[str] = set()
+    # (path, node, names its body references); decorators run at import
+    # time, so they count as top-level code
+    definitions = []
+    for rel in (PKG_NAME, *CALLER_PATHS):
+        for path in _py_files(rel):
+            tree = _parse(path)
+            if rel != PKG_NAME:
+                live |= _referenced_names(tree)
+                continue
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    for decorator in node.decorator_list:
+                        live |= _referenced_names(decorator)
+                    body = set()
+                    for child in ast.iter_child_nodes(node):
+                        if child not in node.decorator_list:
+                            body |= _referenced_names(child)
+                    definitions.append((path, node, body - {node.name}))
+                else:
+                    live |= _referenced_names(node)
+
+    changed = True
+    while changed:
+        changed = False
+        for _path, node, body in definitions:
+            if node.name in live and not body <= live:
+                live |= body
+                changed = True
+
+    return sorted(
+        f"{os.path.relpath(path, REPO)}:{node.lineno} {node.name}"
+        for path, node, _body in definitions
+        if not node.name.startswith("_") and node.name not in live
+    )
+
+
+def test_every_public_function_has_a_caller():
+    uncalled = uncalled_public_definitions()
+    assert not uncalled, (
+        "public functions or classes that no product path, test, tool or "
+        "benchmark reaches — delete them:\n" + "\n".join(uncalled)
     )

@@ -79,8 +79,8 @@ def test_oracle_sql_round_quotients_are_audited():
     """The oracle side of the same ban: `round(<expr with />, k)` in
     queries.py SQL must stay below the audited r12 census. A NEW rounded
     quotient in an oracle string is the same midpoint exposure on the
-    DuckDB side — convert it to the `//` div-round form instead (see
-    functions.rounding.iround_ratio_sql). Sites audited r12 and left
+    DuckDB side — convert it to the `//` div-round form instead (the
+    identity in functions/rounding.py's docstring). Sites audited r12 and left
     deliberately: sqrt/ln-valued quotients, KMV/HLL estimator constants,
     quantizer grids, and decimal-scale-safe literals."""
     qp = os.path.join(PKG, "queries.py")

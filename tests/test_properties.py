@@ -362,50 +362,6 @@ def test_streaming_growth_drained_matches_batch(spark, tmp_path_factory, rows, n
     assert got == want
 
 
-_DOC_TEXT = st.lists(
-    st.sampled_from(["alpha", "beta", "gamma", "delta", "oak", "elm"]),
-    min_size=3,
-    max_size=8,
-).map(" ".join)
-_DOC_SETS = st.lists(_DOC_TEXT, min_size=1, max_size=10)
-
-
-@given(texts=_DOC_SETS, ncuts=st.integers(min_value=0, max_value=2))
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_streaming_dedup_drained_matches_batch(
-    spark, tmp_path_factory, texts, ncuts
-):
-    """Random small-vocabulary corpora (heavy natural shingle collisions,
-    so clusters and cross-batch merges arise constantly) drained through
-    random batch splits maintain exactly the batch dup_clusters table —
-    the final labels are arrival-order independent because merges resolve
-    to the component minimum at read time."""
-    from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.operators import (
-        dedup,
-    )
-    from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.streaming import (
-        dedup_index,
-    )
-
-    docs = [(i + 1, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    cuts = sorted({(len(docs) * (i + 1)) // (ncuts + 1) for i in range(ncuts)})
-    bounds = [0, *cuts, len(docs)]
-    tbl = str(tmp_path_factory.mktemp("dedup_prop"))
-    for bid, (a, b) in enumerate(zip(bounds, bounds[1:])):
-        batch = spark.createDataFrame(docs[a:b] or [], "doc_id long, text string")
-        dedup_index.dedup_apply_batch(batch, bid, tbl)
-    got = {
-        (r.doc_id, r.cluster_id)
-        for r in dedup_index.read_dup_clusters(spark, tbl).collect()
-    }
-    want = {
-        (r.doc_id, r.cluster_id) for r in dedup.dup_clusters(df).collect()
-    }
-    assert got == want
-
-
 _REVENUES = st.lists(
     st.integers(min_value=1, max_value=500),  # cents → decimal(18,2)
     min_size=1,

@@ -69,7 +69,11 @@ def test_lifecycle_stream_finalizes_batches(spark, tmp_path):
             _ev(2, 3, True, 3, "2026-01-01T10:01:20"),
         ],
     )
-    events = batch_stream.read_task_event_stream(spark, str(src), max_files_per_trigger=1)
+    events = (
+        spark.readStream.schema(batch_stream.TASK_EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
     out = batch_stream.batch_lifecycle_stream(events)
     _run_to_memory(out, tmp_path, "lifecycle")
 
@@ -97,7 +101,11 @@ def test_lifecycle_stream_single_microbatch_completion(spark, tmp_path):
         src / "all.json",
         [_ev(7, i, i != 2, 3, f"2026-01-01T10:00:0{i}") for i in (1, 2, 3)],
     )
-    events = batch_stream.read_task_event_stream(spark, str(src))
+    events = (
+        spark.readStream.schema(batch_stream.TASK_EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 10)
+        .json(str(src))
+    )
     out = batch_stream.batch_lifecycle_stream(events)
     _run_to_memory(out, tmp_path, "lifecycle1")
     rows = sorted(
@@ -106,77 +114,3 @@ def test_lifecycle_stream_single_microbatch_completion(spark, tmp_path):
     # both the IN_PROCESS and terminal rows emitted from one micro-batch
     assert [r.state for r in rows] == [STATE_COMPLETE_WITH_ERROR, STATE_IN_PROCESS]
     assert (rows[0].success_count, rows[0].error_count) == (2, 1)
-
-
-def test_windowed_rollup_stream(spark, tmp_path):
-    src = tmp_path / "events2"
-    src.mkdir()
-    _write_events(
-        src / "all.json",
-        [
-            _ev(1, 1, True, 4, "2026-01-01T10:05:00"),
-            _ev(1, 2, False, 4, "2026-01-01T10:55:00"),
-            # advances the watermark to 11:20 (> 11:00), closing the hour-10
-            # window so append mode emits it; hour-11 stays open.
-            _ev(1, 3, True, 4, "2026-01-01T11:30:00"),
-        ],
-    )
-    events = batch_stream.read_task_event_stream(spark, str(src))
-    out = batch_stream.task_outcome_rollup_stream(events)
-    _run_to_memory(out, tmp_path, "rollup")
-    rows = {r.window_start.hour: r for r in spark.sql("select * from rollup").collect()}
-    assert rows[10].n_events == 2
-    assert rows[10].n_success == 1
-    assert rows[10].n_error == 1
-    assert 11 not in rows  # open window not emitted in append mode
-
-
-def test_session_window_stream(spark, tmp_path):
-    src = tmp_path / "events3"
-    src.mkdir()
-    _write_events(
-        src / "all.json",
-        [
-            _ev(1, 1, True, 9, "2026-01-01T10:00:00"),
-            _ev(1, 2, True, 9, "2026-01-01T10:10:00"),
-            # > 30 min gap: session 1 closes
-            _ev(1, 3, True, 9, "2026-01-01T11:00:00"),
-            # far-future event advances the watermark past session 2's end
-            _ev(1, 4, True, 9, "2026-01-01T14:00:00"),
-        ],
-    )
-    events = batch_stream.read_task_event_stream(spark, str(src))
-    out = batch_stream.session_window_stream(events)
-    _run_to_memory(out, tmp_path, "sessions")
-    rows = sorted(
-        spark.sql("select * from sessions").collect(), key=lambda r: r.session_start
-    )
-    # first session: 2 events, 10:00 → 10:10 + 30min gap extension
-    assert rows[0].n_events == 2
-    assert rows[0].session_start.hour == 10 and rows[0].session_start.minute == 0
-    # second session: single 11:00 event
-    assert rows[1].n_events == 1
-    assert rows[1].session_start.hour == 11
-
-
-def test_exact_dedup_stream_first_wins(spark, tmp_path):
-    import json as _json
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    rows = [
-        {"doc_id": 1, "text": "same text", "event_time": "2026-01-01T10:00:00"},
-        {"doc_id": 2, "text": "same text", "event_time": "2026-01-01T10:01:00"},
-        {"doc_id": 3, "text": "other text", "event_time": "2026-01-01T10:02:00"},
-    ]
-    with open(src / "f.json", "w") as f:
-        for r in rows:
-            f.write(_json.dumps(r) + "\n")
-    docs = (
-        spark.readStream.schema("doc_id long, text string, event_time timestamp")
-        .json(str(src))
-    )
-    out = batch_stream.exact_dedup_stream(docs)
-    _run_to_memory(out, tmp_path, "dedup_stream")
-    got = sorted(r.doc_id for r in spark.sql("select * from dedup_stream").collect())
-    assert got == [1, 3]

@@ -10,9 +10,6 @@ from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_fram
     interleave_bits,
     write_zordered,
 )
-from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.sources.catalog import (
-    load_table,
-)
 from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.operators import (
     similarity,
 )
@@ -99,424 +96,3 @@ def test_ivf_add_probe_finds_new_vectors(spark, sf_dir):
     got = {r.query_id - 100000: (r.neighbor_id, r.cosine) for r in hits}
     for i in [r.vec_id for r in new.select("vec_id").collect()]:
         assert got[i][0] == i and got[i][1] == 1.0, got
-
-
-def test_ivf_stream_maintenance_matches_batch_ivf_add(spark, sf_dir, tmp_path):
-    """foreachBatch IVF maintenance: after streaming new vectors in two
-    micro-batches, the persisted index probes IDENTICALLY to the batch
-    ivf_add path over the same vectors (same frozen centroids, same
-    assignment math), and the new vectors are findable."""
-    import json
-
-    from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.streaming import (
-        ann_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < 400)
-    cent, base_assign = similarity.ivf_build(base, nlist=8, iters=2)
-    idx = tmp_path / "ivf"
-    similarity.ivf_save(cent, base_assign, str(idx))
-
-    new_rows = [
-        {"vec_id": r["vec_id"], "embedding": [float(x) for x in r["embedding"]]}
-        for r in emb.filter(F.col("vec_id") >= 400).collect()
-    ]
-    assert new_rows, "need new vectors beyond the base corpus"
-    src = tmp_path / "vecsrc"
-    src.mkdir()
-    half = len(new_rows) // 2
-    for i, chunk in enumerate([new_rows[:half], new_rows[half:]]):
-        with open(src / f"b{i}.json", "w") as f:
-            for r in chunk:
-                f.write(json.dumps(r) + "\n")
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        ann_index.ivf_stream_writer(stream, str(idx), str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    assign2 = ann_index.read_ivf_assignments(spark, str(idx))
-    queries = emb.filter(F.col("vec_id") % 100 == 1)
-    streamed = similarity.ivf_probe(cent, assign2, queries, k=5).collect()
-
-    new_df = emb.filter(F.col("vec_id") >= 400)
-    batch_assign = similarity.ivf_add(cent, base_assign, new_df)
-    batch = similarity.ivf_probe(cent, batch_assign, queries, k=5).collect()
-
-    key = lambda r: (r.query_id, r.rk)  # noqa: E731
-    assert sorted(streamed, key=key) == sorted(batch, key=key)
-    # the maintained file actually contains the streamed vectors
-    assert assign2.filter(F.col("vid") >= 400).count() == len(new_rows)
-
-
-def _mini_index(spark, sf_dir, tmp_path, name):
-    from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.streaming import (
-        ann_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < 400)
-    cent, base_assign = similarity.ivf_build(base, nlist=8, iters=2)
-    idx = tmp_path / name
-    similarity.ivf_save(cent, base_assign, str(idx))
-    new_df = emb.filter(F.col("vec_id") >= 400)
-    return ann_index, emb, cent, base_assign, new_df, str(idx)
-
-
-def test_ivf_append_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """An at-least-once replay of a micro-batch (crash between delta
-    write and checkpoint commit) must NOT duplicate its vectors: the
-    replay overwrites its own delta dir, so probes over the maintained
-    index equal the exactly-once batch ivf_add result."""
-    ann_index, emb, cent, base_assign, new_df, idx = _mini_index(
-        spark, sf_dir, tmp_path, "ivf_replay"
-    )
-    b0 = new_df.filter(F.col("vec_id") % 2 == 0)
-    b1 = new_df.filter(F.col("vec_id") % 2 == 1)
-    assert ann_index.ivf_append_batch(b0, 0, idx)
-    assert ann_index.ivf_append_batch(b1, 1, idx)
-    # replay batch 1 (the crash-recovery re-delivery)
-    assert ann_index.ivf_append_batch(b1, 1, idx)
-
-    maintained = ann_index.read_ivf_assignments(spark, idx)
-    # no duplicate rows for any vector id
-    n_new = new_df.count()
-    assert maintained.filter(F.col("vid") >= 400).count() == n_new
-    queries = emb.filter(F.col("vec_id") % 100 == 1)
-    got = similarity.ivf_probe(cent, maintained, queries, k=5).collect()
-    want_assign = similarity.ivf_add(cent, base_assign, new_df)
-    want = similarity.ivf_probe(cent, want_assign, queries, k=5).collect()
-    key = lambda r: (r.query_id, r.rk)  # noqa: E731
-    assert sorted(got, key=key) == sorted(want, key=key)
-
-
-def test_ivf_append_refuses_reset_checkpoint_epoch(spark, sf_dir, tmp_path):
-    import pytest
-
-    ann_index, _emb, _cent, _ba, new_df, idx = _mini_index(
-        spark, sf_dir, tmp_path, "ivf_epoch"
-    )
-    b = new_df.limit(20)
-    ann_index.ivf_append_batch(b, 0, idx)
-    ann_index.ivf_append_batch(new_df.limit(40), 1, idx)
-    with pytest.raises(ValueError, match="high water"):
-        ann_index.ivf_append_batch(b, 0, idx)
-
-
-def test_ivf_stream_compact_preserves_probes_and_bounds_dirs(
-    spark, sf_dir, tmp_path
-):
-    """Compaction folds base + deltas into one base=<C> generation:
-    probes identical before/after, delta-dir count bounded under a long
-    stream, and replays of folded batches no-op."""
-    import os
-
-    ann_index, emb, cent, base_assign, new_df, idx = _mini_index(
-        spark, sf_dir, tmp_path, "ivf_compact"
-    )
-    every = 4
-    for i in range(12):
-        b = new_df.filter(F.col("vec_id") % 12 == i)
-        ann_index.ivf_append_batch(b, i, idx)
-        meta = ann_index._read_meta(idx)
-        if meta["high_water"] - meta["compacted_through"] >= every:
-            ann_index.ivf_stream_compact(spark, idx)
-    assert len(ann_index._delta_versions(idx)) <= every
-    assert len(ann_index._base_generations(idx)) == 1
-
-    maintained = ann_index.read_ivf_assignments(spark, idx)
-    queries = emb.filter(F.col("vec_id") % 100 == 1)
-    got = similarity.ivf_probe(cent, maintained, queries, k=5).collect()
-    want_assign = similarity.ivf_add(cent, base_assign, new_df)
-    want = similarity.ivf_probe(cent, want_assign, queries, k=5).collect()
-    key = lambda r: (r.query_id, r.rk)  # noqa: E731
-    assert sorted(got, key=key) == sorted(want, key=key)
-    # a replay of an already-folded batch is a no-op (not an error, no
-    # resurrected delta dir)
-    folded = ann_index._read_meta(idx)["compacted_through"]
-    assert folded >= 0
-    assert not ann_index.ivf_append_batch(
-        new_df.filter(F.col("vec_id") % 12 == 0), 0, idx
-    )
-    assert not os.path.isdir(os.path.join(idx, "deltas", "v=0"))
-
-
-def test_ivf_compact_crash_between_base_and_meta_no_duplicates(
-    spark, sf_dir, tmp_path
-):
-    """The r7 crash window: compaction writes base=<C> (step 1) BEFORE
-    meta (step 2). Simulate a crash exactly between the two — the folded
-    base is committed but ``compacted_through`` is stale and the folded
-    delta dirs are unpruned. Readers must NOT resolve the folded deltas a
-    second time (the delta floor is base-derived, not meta-derived):
-    probes stay identical, no vector id resolves twice, and the next
-    compaction finishes the interrupted one instead of baking duplicates
-    into a new base."""
-    import os
-
-    ann_index, emb, cent, base_assign, new_df, idx = _mini_index(
-        spark, sf_dir, tmp_path, "ivf_crash"
-    )
-    # batches 0-2 stream in before the crash; %4==3 is held back so the
-    # post-repair batch appends genuinely NEW vectors (deltas are
-    # disjoint new-vector appends by contract)
-    streamed_df = new_df.filter(F.col("vec_id") % 4 < 3)
-    held_back = new_df.filter(F.col("vec_id") % 4 == 3)
-    for i in range(3):
-        ann_index.ivf_append_batch(
-            new_df.filter(F.col("vec_id") % 4 == i), i, idx
-        )
-    queries = emb.filter(F.col("vec_id") % 100 == 1)
-    key = lambda r: (r.query_id, r.rk)  # noqa: E731
-    before = sorted(
-        similarity.ivf_probe(
-            cent, ann_index.read_ivf_assignments(spark, idx), queries, k=5
-        ).collect(),
-        key=key,
-    )
-
-    # step 1 of compaction only: write base=<C>, then "crash" — meta is
-    # never updated and the folded deltas are never pruned
-    crash_c = max(ann_index._delta_versions(idx))
-    ann_index.read_ivf_assignments(spark, idx).write.mode(
-        "overwrite"
-    ).partitionBy("centroid_id").parquet(f"{idx}/base={crash_c}")
-    assert ann_index._read_meta(idx)["compacted_through"] < crash_c
-    assert ann_index._delta_versions(idx)  # folded deltas still on disk
-
-    maintained = ann_index.read_ivf_assignments(spark, idx)
-    # every streamed vector resolves exactly once (no duplicate vids)
-    n_new = streamed_df.count()
-    assert maintained.filter(F.col("vid") >= 400).count() == n_new
-    assert (
-        maintained.groupBy("vid").count().filter(F.col("count") > 1).count()
-        == 0
-    )
-    after_crash = sorted(
-        similarity.ivf_probe(cent, maintained, queries, k=5).collect(),
-        key=key,
-    )
-    assert after_crash == before
-
-    # a replay of a folded batch is a no-op even with stale meta
-    assert not ann_index.ivf_append_batch(
-        new_df.filter(F.col("vec_id") % 4 == 0), 0, idx
-    )
-
-    # the next compaction finishes the interrupted one: meta catches up,
-    # folded dirs are pruned, nothing is re-folded, probes unchanged
-    ann_index.ivf_stream_compact(spark, idx)
-    assert ann_index._read_meta(idx)["compacted_through"] == crash_c
-    assert ann_index._delta_versions(idx) == []
-    maintained2 = ann_index.read_ivf_assignments(spark, idx)
-    assert maintained2.filter(F.col("vid") >= 400).count() == n_new
-    recompacted = sorted(
-        similarity.ivf_probe(cent, maintained2, queries, k=5).collect(),
-        key=key,
-    )
-    assert recompacted == before
-
-    # and the stream continues cleanly past the repaired state with the
-    # held-back (genuinely new) vectors
-    assert ann_index.ivf_append_batch(held_back, crash_c + 1, idx)
-    final = ann_index.read_ivf_assignments(spark, idx)
-    assert final.filter(F.col("vid") >= 400).count() == new_df.count()
-    assert (
-        final.groupBy("vid").count().filter(F.col("count") > 1).count() == 0
-    )
-
-
-def test_ivf_reader_skips_torn_base_dir(spark, sf_dir, tmp_path):
-    """A crash mid-way through the compaction's base=<C> parquet job
-    leaves a torn dir (no _SUCCESS marker). Readers must treat it as
-    invisible — falling back to the previous base + deltas — instead of
-    selecting it and dropping/failing the whole index base."""
-    import os
-
-    ann_index, emb, cent, base_assign, new_df, idx = _mini_index(
-        spark, sf_dir, tmp_path, "ivf_torn"
-    )
-    for i in range(2):
-        ann_index.ivf_append_batch(
-            new_df.filter(F.col("vec_id") % 2 == i), i, idx
-        )
-    queries = emb.filter(F.col("vec_id") % 100 == 1)
-    key = lambda r: (r.query_id, r.rk)  # noqa: E731
-    before = sorted(
-        similarity.ivf_probe(
-            cent, ann_index.read_ivf_assignments(spark, idx), queries, k=5
-        ).collect(),
-        key=key,
-    )
-
-    # a torn base at the generation the crashed compact was writing
-    # (C = max delta version): dir exists, only _temporary, no _SUCCESS
-    crash_c = max(ann_index._delta_versions(idx))
-    torn = os.path.join(idx, f"base={crash_c}")
-    os.makedirs(os.path.join(torn, "_temporary"))
-    assert ann_index._base_generations(idx) == []
-    assert crash_c in ann_index._base_generations(idx, committed_only=False)
-
-    after = sorted(
-        similarity.ivf_probe(
-            cent, ann_index.read_ivf_assignments(spark, idx), queries, k=5
-        ).collect(),
-        key=key,
-    )
-    assert after == before
-
-    # the next compaction replaces/prunes the torn dir and commits for real
-    ann_index.ivf_stream_compact(spark, idx)
-    bases = ann_index._base_generations(idx)
-    assert len(bases) == 1
-    assert ann_index._base_generations(idx, committed_only=False) == bases
-    final = sorted(
-        similarity.ivf_probe(
-            cent, ann_index.read_ivf_assignments(spark, idx), queries, k=5
-        ).collect(),
-        key=key,
-    )
-    assert final == before
-
-
-def test_ivf_probe_stream_drained_equals_batch(spark, sf_dir, tmp_path):
-    """Online serving, drained-stream ≡ batch: query vectors streamed in
-    micro-batches against a static index produce — as the union of the
-    committed per-batch result dirs — exactly the rows one batch
-    ivf_probe returns over the same query set."""
-    import json
-
-    ann_index, emb, cent, base_assign, _, idx = _mini_index(
-        spark, sf_dir, tmp_path, "ivf_serve"
-    )
-
-    q_rows = [
-        {"vec_id": r["vec_id"], "embedding": [float(x) for x in r["embedding"]]}
-        for r in emb.filter(F.col("vec_id") % 100 == 1).collect()
-    ]
-    assert len(q_rows) >= 4
-    src = tmp_path / "qsrc"
-    src.mkdir()
-    half = len(q_rows) // 2
-    for i, chunk in enumerate([q_rows[:half], q_rows[half:]]):
-        with open(src / f"q{i}.json", "w") as f:
-            for r in chunk:
-                f.write(json.dumps(r) + "\n")
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    out = str(tmp_path / "serve_out")
-    q = (
-        ann_index.ivf_probe_stream_writer(
-            stream, idx, out, str(tmp_path / "serve_ckpt"), k=5
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    streamed = ann_index.read_probe_results(spark, out).collect()
-    queries = emb.filter(F.col("vec_id") % 100 == 1)
-    batch = similarity.ivf_probe(cent, base_assign, queries, k=5).collect()
-    key = lambda r: (r.query_id, r.rk)  # noqa: E731
-    assert sorted(streamed, key=key) == sorted(batch, key=key)
-
-
-def test_ivf_probe_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """An at-least-once replay of a serving micro-batch overwrites its own
-    result dir — the drained result set is identical, no duplicated
-    neighbor rows."""
-    ann_index, emb, _, _, _, idx = _mini_index(
-        spark, sf_dir, tmp_path, "ivf_replay_serve"
-    )
-    queries = emb.filter(F.col("vec_id") % 100 == 1)
-    out = str(tmp_path / "replay_out")
-
-    assert ann_index.ivf_probe_batch(queries, 0, idx, out, k=5)
-    once = sorted(
-        ann_index.read_probe_results(spark, out).collect(),
-        key=lambda r: (r.query_id, r.rk),
-    )
-    # completed-batch replay: acknowledged by the meta high water, skipped
-    assert ann_index.ivf_probe_batch(queries, 0, idx, out, k=5) is False
-    twice = sorted(
-        ann_index.read_probe_results(spark, out).collect(),
-        key=lambda r: (r.query_id, r.rk),
-    )
-    assert twice == once
-    assert len({(r.query_id, r.rk) for r in twice}) == len(twice)
-
-    # crash window: result dir committed but the meta write was lost —
-    # the un-acknowledged dir is invisible to readers, and the replay
-    # re-probes (overwrite) and re-acknowledges it
-    ann_index._write_probe_meta(out, {"high_water": -1})
-    import pytest
-
-    with pytest.raises(FileNotFoundError):
-        ann_index.read_probe_results(spark, out)
-    assert ann_index.ivf_probe_batch(queries, 0, idx, out, k=5)
-    again = sorted(
-        ann_index.read_probe_results(spark, out).collect(),
-        key=lambda r: (r.query_id, r.rk),
-    )
-    assert again == once
-
-
-def test_ivf_probe_output_refuses_reset_checkpoint_epoch(
-    spark, sf_dir, tmp_path
-):
-    """A batch id BELOW the probe output's high water means the driving
-    checkpoint was reset or swapped: refused loudly instead of letting a
-    new, shorter epoch leave stale higher-version result dirs in the
-    served union (the maintenance and growth sinks' epoch rule)."""
-    import pytest
-
-    ann_index, emb, _, _, _, idx = _mini_index(
-        spark, sf_dir, tmp_path, "ivf_probe_epoch"
-    )
-    queries = emb.filter(F.col("vec_id") % 100 == 1)
-    out = str(tmp_path / "epoch_out")
-    assert ann_index.ivf_probe_batch(queries, 0, idx, out, k=5)
-    assert ann_index.ivf_probe_batch(queries, 1, idx, out, k=5)
-    with pytest.raises(ValueError, match="high water"):
-        ann_index.ivf_probe_batch(queries, 0, idx, out, k=5)
-
-
-def test_ivf_probe_stream_sees_maintenance_between_batches(
-    spark, sf_dir, tmp_path
-):
-    """Serve-while-maintain freshness: a query batch probed BEFORE an
-    index append cannot see the appended vectors; the same queries probed
-    AFTER the append resolve them — each serving batch reads the index as
-    of its own probe time, ordered only by dir-commit visibility."""
-    ann_index, emb, _, _, new_df, idx = _mini_index(
-        spark, sf_dir, tmp_path, "ivf_fresh"
-    )
-    # query WITH the exact new vectors: their post-append top-1 must be
-    # themselves (cosine 1.0) — but ivf_probe excludes self-matches, so
-    # query with the base corpus' nearest proxies instead: use the new
-    # vectors as queries and look for NEW neighbors (vec_id >= 400).
-    queries = new_df.filter(F.col("vec_id") % 7 == 0).limit(8)
-    assert queries.count() > 0
-    out = str(tmp_path / "fresh_out")
-
-    ann_index.ivf_probe_batch(queries, 0, idx, out, k=5)
-    before = spark.read.parquet(f"{out}/v=0")
-    assert before.filter(F.col("neighbor_id") >= 400).count() == 0
-
-    assert ann_index.ivf_append_batch(new_df, 1, idx)
-    ann_index.ivf_probe_batch(queries, 1, idx, out, k=5)
-    after = spark.read.parquet(f"{out}/v=1")
-    # other new vectors (not the query itself) now rank as neighbors
-    assert after.filter(F.col("neighbor_id") >= 400).count() > 0

@@ -123,50 +123,6 @@ def pareto_window_variant(spark, sf_dir: str):
     )
 
 
-def dedup_index_stream_drain(spark, sf_dir: str):
-    """Streaming control (r12): drain the sf documents corpus through the
-    incremental dup-cluster maintainer (streaming/dedup_index.py) in 3
-    file-source micro-batches with one mid-stream compaction — the
-    stateful-streaming cost curve next to its batch twin
-    (dedup_minhash_lsh / dup_clusters). Timing includes the one-off
-    parquet chunking of the source (O(scan), same at every sf)."""
-    import shutil
-    import tempfile
-
-    from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.sources.catalog import (
-        load_table,
-    )
-    from connexion2k12_extending_the_axeda_domain_model_simple_batch_processing_framework_spark.streaming import (
-        dedup_index,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="probe_ddix_")
-    try:
-        src = os.path.join(tmp, "src")
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        ).repartition(3).write.parquet(src)
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        query = (
-            dedup_index.dedup_stream_writer(
-                stream,
-                os.path.join(tmp, "tbl"),
-                os.path.join(tmp, "ckpt"),
-                compact_every=2,
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(3600)
-        force(dedup_index.read_dup_clusters(spark, os.path.join(tmp, "tbl")))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def main() -> None:
     out_path = sys.argv[1]
     dirs = sys.argv[2:]
@@ -223,18 +179,6 @@ def main() -> None:
             force(pareto_window_variant(spark, sf_dir))
             secs.append(round(time.perf_counter() - t0, 3))
         times["parts_abc_pareto_GLOBAL_WINDOW_CONTROL"] = min(secs)
-        # streaming drain control (one shot — checkpointed drains don't
-        # repeat; variance is amortized by the 3-batch structure)
-        t0 = time.perf_counter()
-        dedup_index_stream_drain(spark, sf_dir)
-        times["streaming_dedup_index_drain"] = round(
-            time.perf_counter() - t0, 3
-        )
-        print(
-            f"[probe] {sf_dir} streaming_dedup_index_drain:"
-            f" {times['streaming_dedup_index_drain']}s",
-            file=sys.stderr,
-        )
         results[sf_dir] = times
         print(json.dumps({sf_dir: times}))
     with open(out_path, "w") as f:
